@@ -15,8 +15,8 @@ object SparkEntry {
 
   private val ev = TranscriptCols.events
 
-  /** Shared scenario for the three as-of variants: every event ← latest
-    * purchase at-or-before it. */
+  /** Shared scenario for the as-of queries: every event ← latest purchase
+    * at-or-before it. */
   private def asofVariant(s: SparkSession, dir: String,
       f: (DataFrame, DataFrame, String, String, String, Seq[String], String) => DataFrame): DataFrame = {
     val events = Pipelines.table(s, dir, "events")
@@ -61,17 +61,8 @@ object SparkEntry {
       LagLead.withLagLead(Pipelines.table(s, dir, "events"), ev)
         .select(col("user_id"), col("event_id"), col("prev_role"), col("next_role"),
           col("dt_prev_us"), col("dt_next_us"), col("turn_rank"))),
-    "q_asof_join" -> ((s, dir) => {
-      val events = Pipelines.table(s, dir, "events")
-      val purchases = events.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      AsOfJoin.merged(
-        left = events.select(col("user_id"), col("event_id"), col("ts")),
-        right = purchases, key = "user_id", ts = "ts", rightSeq = "event_id",
-        payload = Seq("event_id", "value"))
-        .select(col("user_id"), col("event_id"),
-          col("asof_event_id"), col("asof_value"))
-    }),
+    "q_asof_join" -> ((s, dir) =>
+      asofVariant(s, dir, graft.plans.AsOfPlan.asOfJoin(_, _, _, _, _, _, _))),
     "q_sliding_stats" -> ((s, dir) => {
       // sliding (last-3-rows) per-entity stats — the bounded-frame window
       // family (tumbling/session are covered elsewhere); partitioned by

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import scala.collection.mutable.ArrayBuffer
 
 /** Backward (point-in-time) as-of join — the engine's flagship operator.
   *
@@ -14,16 +13,17 @@ import scala.collection.mutable.ArrayBuffer
   * wins (deterministic tiebreak). Zero temporal leakage by construction:
   * no right row with ts' > ts can ever reach a left row.
   *
-  * Spark has no built-in as-of join, so four equivalent implementations are
-  * provided (property-tested identical — SURVEY §7.4.5):
+  * Spark has no built-in as-of join. The native Catalyst operator
+  * ([[graft.plans.AsOfPlan.asOfJoin]]: a logical node, a strategy and a
+  * hash-partitioned single-pass merge exec) is the engine's as-of join and
+  * the one the flagship runs. This object holds the variants that serve
+  * inputs the planned exec does not (property-tested identical in
+  * AsOfJoinSpec):
   *
   *  1. `windowed` — union-tag + `last(ignoreNulls)` over a cumulative window.
   *     Declarative; Catalyst plans one exchange + one sort. The SQL-oracle
   *     form (DuckDB `ASOF JOIN` cross-checks it).
-  *  2. `merged` — hash-repartition on the key + secondary sort (key, ts,
-  *     side) + a single-pass `mapPartitions` merge carrying last-seen
-  *     payload. One shuffle, NO range-sampling pass, O(1) state per key.
-  *  2b. `mergedScalable` — RANGE-partitioned on (key, ts) + boundary
+  *  2. `mergedScalable` — RANGE-partitioned on (key, ts) + boundary
   *     stitching: the explicit skew path for mega-keys (see its doc).
   *  3. `broadcastIndex` — when the right side is a SMALL timestamp index:
   *     broadcast sorted per-key arrays and binary-search per left row. No
@@ -35,12 +35,12 @@ import scala.collection.mutable.ArrayBuffer
   * bytes by ~5× versus the naive wide union.
   *
   * At cluster scale the choice is mechanical: (3) if right fits the
-  * broadcast threshold; (2b) when a key can dominate a partition; else (2);
-  * (1) as the semantic oracle.
+  * broadcast threshold; (2) when a key can dominate a partition; else the
+  * planned operator; (1) as the semantic oracle.
   */
 object AsOfJoin {
 
-  /** Key types the InternalRow merge variants support. The merges detect
+  /** Key types the InternalRow merges support. The merges detect
     * key-group changes with Java equals on InternalRow-extracted values,
     * which is value-equality for UTF8String and boxed primitives but
     * REFERENCE equality for BinaryType (Array[Byte]) — and broadcastIndex
@@ -65,10 +65,12 @@ object AsOfJoin {
     * instead of the round-5 rank window: the window form shuffled EVERY
     * right row and then sorted each (key, ts) group; the agg form collapses
     * duplicate groups before the exchange (guide §2.3 "aggregate before you
-    * shuffle") and plans no sort at all. Deterministic: the struct compares
-    * rightSeq first, so the greatest-seq row wins exactly as before; a
-    * duplicate-seq tie resolves by payload order (the window's row_number
-    * tie was input-order, i.e. nondeterministic). */
+    * shuffle"). It still sorts: `max` over a struct buffer is not
+    * hash-aggregatable, so Spark plans a SortAggregate on each side of the
+    * exchange. Deterministic: the struct compares rightSeq first, so the
+    * greatest-seq row wins exactly as before; a duplicate-seq tie resolves
+    * by payload order (the window's row_number tie was input-order, i.e.
+    * nondeterministic). Every payload column must therefore be orderable. */
   private def dedupRight(right: DataFrame, key: String, ts: String, rightSeq: String,
                          payload: Seq[String]): DataFrame = {
     val packedCols = (rightSeq +: payload.filterNot(_ == rightSeq)).map(col)
@@ -83,9 +85,8 @@ object AsOfJoin {
       union: DataFrame, lStructType: StructType, pStructType: StructType)
 
   private def pack(left: DataFrame, right: DataFrame, key: String, ts: String,
-                   rightSeq: String, payload: Seq[String], dedup: Boolean): Packed = {
-    val r = if (dedup) dedupRight(right, key, ts, rightSeq, payload)
-      else right.select((Seq(key, ts) ++ payload).map(col): _*)
+                   rightSeq: String, payload: Seq[String]): Packed = {
+    val r = dedupRight(right, key, ts, rightSeq, payload)
     val lTagged = left.select(
       col(key).as("__k"), micros(col(ts)).as("__t"), lit(1).as("__side"),
       struct(left.columns.map(col): _*).as("__l"),
@@ -103,11 +104,12 @@ object AsOfJoin {
   private def outSchema(lt: StructType, pt: StructType, prefix: String): StructType =
     StructType(lt.fields ++ pt.fields.map(f => f.copy(name = s"$prefix${f.name}", nullable = true)))
 
-  /** Variant 1 — declarative window fill. */
+  /** Variant 1 — declarative window fill. Payload columns must be
+    * orderable; a duplicate-`rightSeq` tie within one (key, ts) resolves to
+    * the greatest payload (see `dedupRight`). */
   def windowed(left: DataFrame, right: DataFrame, key: String, ts: String,
-               rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-               dedup: Boolean = true): DataFrame = {
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
+               rightSeq: String, payload: Seq[String], prefix: String = "asof_"): DataFrame = {
+    val p = pack(left, right, key, ts, rightSeq, payload)
     val w = Window.partitionBy(col("__k")).orderBy(col("__t"), col("__side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     p.union
@@ -118,64 +120,9 @@ object AsOfJoin {
         payload.map(pc => col(s"__p.$pc").as(s"$prefix$pc")): _*)
   }
 
-  /** Variant 2 — hash-partitioned, secondary-sorted single-pass merge.
+  /** Variant 2 — SKEW-PROOF range-partitioned merge with boundary stitching.
     *
-    * The merge itself runs at the InternalRow level (no external Row
-    * conversion): per input row the only allocations are one UnsafeRow copy
-    * per EMITTED row and one struct copy per right row — the external-Row
-    * version allocated ~|columns| boxed objects per row and was GC-bound.
-    */
-  def merged(left: DataFrame, right: DataFrame, key: String, ts: String,
-             rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-             numPartitions: Int = 0, dedup: Boolean = true): DataFrame = {
-    val spark = left.sparkSession
-    requireKeyType(left, key, "merged")
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    // hash partitioning keeps every key inside one partition (all the merge
-    // needs) without range partitioning's extra sampling job over the union
-    val sorted = p.union
-      .repartition(parts, col("__k"))
-      .sortWithinPartitions(col("__k"), col("__t"), col("__side"))
-    val out = outSchema(p.lStructType, p.pStructType, prefix)
-    val keyType = sorted.schema("__k").dataType
-    val nL = p.lStructType.size
-    val nP = p.pStructType.size
-    val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(out)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val nullPay = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nP)
-      var curKey: Any = null
-      var haveKey = false
-      var lastPay: org.apache.spark.sql.catalyst.InternalRow = null
-      it.flatMap { row =>
-        val k = row.get(0, keyType) // UnsafeRow-backed value; copy on retain
-        if (!haveKey || k != curKey) {
-          curKey = k match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-            case other => other
-          }
-          haveKey = true
-          lastPay = null
-        }
-        if (row.getInt(2) == 0) { // right row: retain a copy of its payload
-          lastPay = row.getStruct(4, nP).copy()
-          Iterator.empty
-        } else {
-          val l = row.getStruct(3, nL)
-          joined(l, if (lastPay == null) nullPay else lastPay)
-          Iterator.single(proj(joined).copy(): org.apache.spark.sql.catalyst.InternalRow)
-        }
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, out)
-  }
-
-  /** Variant 2b — SKEW-PROOF range-partitioned merge with boundary stitching.
-    *
-    * `merged` keeps each key in one partition, so one mega-conversation (a
+    * The planned exec keeps each key in one partition, so one mega-conversation (a
     * key holding, say, 50% of all rows) lands on ONE task — the classic skew
     * failure the north rule calls out. This variant range-partitions by
     * (key, ts), letting a huge key span MANY partitions, and repairs
@@ -190,15 +137,18 @@ object AsOfJoin {
     *
     * Parallel-prefix-sum shape: work is proportional to rows per PARTITION,
     * not rows per KEY. Both passes scan the same sorted shuffle output
-    * (persisted). Property-tested identical to `merged` incl. mega-key
-    * fixtures.
+    * (persisted). Property-tested identical to the planned exec incl.
+    * mega-key fixtures.
+    *
+    * Payload columns must be orderable; a duplicate-`rightSeq` tie within one
+    * (key, ts) resolves to the greatest payload (see `dedupRight`).
     */
   def mergedScalable(left: DataFrame, right: DataFrame, key: String, ts: String,
                      rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-                     numPartitions: Int = 0, dedup: Boolean = true): DataFrame = {
+                     numPartitions: Int = 0): DataFrame = {
     val spark = left.sparkSession
     requireKeyType(left, key, "mergedScalable")
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
+    val p = pack(left, right, key, ts, rightSeq, payload)
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
@@ -288,10 +238,12 @@ object AsOfJoin {
   /** Variant 3 — broadcast per-key sorted timestamp index + binary search.
     * Right side must be collect-ably small (an INDEX, not a fact table):
     * `maxIndexRows` guards the driver — exceeding it fails fast with a
-    * pointer at merged/mergedScalable instead of OOMing at 100× data.
-    * Key must be string/integral (external-Row index values are compared
-    * against InternalRow probe values; date/timestamp/decimal externals
-    * don't equal their internal representations). */
+    * pointer at the planned exec/mergedScalable instead of OOMing at 100×
+    * data. Key must be string/integral (external-Row index values are
+    * compared against InternalRow probe values; date/timestamp/decimal
+    * externals don't equal their internal representations). Payload
+    * columns must be orderable; a duplicate-`rightSeq` tie within one
+    * (key, ts) resolves to the greatest payload (see `dedupRight`). */
   def broadcastIndex(left: DataFrame, right: DataFrame, key: String, ts: String,
                      rightSeq: String, payload: Seq[String], prefix: String = "asof_",
                      maxIndexRows: Int = 2000000): DataFrame = {
@@ -307,7 +259,7 @@ object AsOfJoin {
     val collected = r.limit(maxIndexRows + 1).collect()
     require(collected.length <= maxIndexRows,
       s"AsOfJoin.broadcastIndex: right side exceeds maxIndexRows=$maxIndexRows " +
-        "(deduped) — this variant is for small indexes; use merged/mergedScalable")
+        "(deduped) — this variant is for small indexes; use AsOfPlan.asOfJoin/mergedScalable")
     val index: Map[Any, (Array[Long], Array[Row])] =
       collected.groupBy(_.get(0)).map { case (k, rows) =>
         val sortedRows = rows.sortBy(_.getLong(1))

@@ -16,22 +16,22 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The as-of join as a FIRST-CLASS Catalyst operator: a logical node, a
   * planner strategy, and a physical merge exec.
   *
-  * Why a physical plan and not the Dataset-level `AsOfJoin.merged`: merged
-  * builds its shuffle+sort by hand and crosses an `internalCreateDataFrame`
-  * RDD boundary, so EXPLAIN shows an opaque scan, AQE cannot re-plan around
-  * it, and Catalyst cannot push projections/filters through it. Here the
-  * physical node just DECLARES what it needs —
+  * Why a physical plan and not a Dataset-level merge that builds its
+  * shuffle+sort by hand and crosses an `internalCreateDataFrame` RDD
+  * boundary: such a merge shows up in EXPLAIN as an opaque scan, AQE cannot
+  * re-plan around it, and Catalyst cannot push projections/filters through
+  * it. Here the physical node just DECLARES what it needs —
   *
   *   requiredChildDistribution: both children clustered by the join key;
   *   requiredChildOrdering:     (key, ts[, seq]) ascending
   *
   * — and EnsureRequirements inserts the exchanges and sorts, exactly as for
-  * SortMergeJoin. The merge itself is the same single-pass last-seen-payload
-  * sweep as `AsOfJoin.merged` (one sequential pass per co-partition; work
-  * proportional to partition size). The right-side (key, ts) dedup falls out
-  * of the sort for free: ordering by (key, ts, seq) means the LAST row seen
-  * for a (key, ts) group has the greatest seq — the documented tiebreak —
-  * and simply overwrites the carried payload.
+  * SortMergeJoin. The merge itself is a single-pass last-seen-payload sweep
+  * (one sequential pass per co-partition; work proportional to partition
+  * size). The right-side (key, ts) dedup falls out of the sort for free:
+  * ordering by (key, ts, seq) means the LAST row seen for a (key, ts) group
+  * has the greatest seq — the documented tiebreak — and simply overwrites
+  * the carried payload.
   *
   * Semantics (property-tested identical to the other variants in
   * AsOfJoinSpec): for each left row, the payload of the latest right row

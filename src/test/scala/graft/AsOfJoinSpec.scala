@@ -45,11 +45,13 @@ class AsOfJoinSpec extends SparkSpec {
       l.event_id -> (best.map(_.event_id), best.map(_.value))
     }.toMap
 
+  private val planned: (DataFrame, DataFrame) => DataFrame = (l, r) =>
+    graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))
+
   private val variants: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
     "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "merged" -> ((l, r) => AsOfJoin.merged(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
     "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))))
+    "planned" -> planned)
 
   test("all three variants equal the in-memory oracle on random scenarios") {
     for (seed <- Seq(1L, 2L, 3L)) {
@@ -100,7 +102,8 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("zero leakage: mutating right rows strictly after an anchor never changes it") {
     val (left, right) = scenario(9L, nKeys = 4, nLeft = 80, nRight = 40)
-    val base = run(variants(1)._2, left, right)
+    // the planned operator is the one the flagship runs
+    val base = run(planned, left, right)
     // shift every right row that is strictly after ALL anchors of its key
     val maxAnchor = left.groupBy(_.user_id).view.mapValues(_.map(_.ts.getTime).max).toMap
     val mutated = right.map { r =>
@@ -108,7 +111,7 @@ class AsOfJoinSpec extends SparkSpec {
         r.copy(value = r.value + 999.0, event_id = r.event_id + 5000)
       else r
     }
-    assert(run(variants(1)._2, left, mutated) == base)
+    assert(run(planned, left, mutated) == base)
   }
 
   test("no right rows for a key → null payload") {
@@ -158,13 +161,10 @@ class AsOfJoinSpec extends SparkSpec {
       assert(fromWindowed(i.toLong).contains(1000L), s"null anchor $i"))
     assert(fromWindowed(1L).contains(1001L))
     for ((name, f) <- Seq(
-      "merged" -> ((l: DataFrame, r: DataFrame) =>
-        AsOfJoin.merged(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
       "mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
         AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
           numPartitions = 8)),
-      "planned" -> ((l: DataFrame, r: DataFrame) =>
-        graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value")))))
+      "planned" -> planned))
       assert(runNull(f) == fromWindowed, s"null-key variant $name")
   }
 
@@ -196,8 +196,7 @@ class AsOfJoinSpec extends SparkSpec {
     val binKey = (df: DataFrame) => df.withColumn("user_id",
       col("user_id").cast("string").cast("binary"))
     intercept[IllegalArgumentException] {
-      AsOfJoin.merged(binKey(left.toDF()), binKey(right.toDF()), "user_id", "ts",
-        "event_id", Seq("event_id", "value"))
+      planned(binKey(left.toDF()), binKey(right.toDF()))
     }
   }
 }

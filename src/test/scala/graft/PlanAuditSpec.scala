@@ -68,12 +68,16 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_pit_backfill EXPLAIN shows the whole pipeline through the native as-of") {
+    Seq("q_pit_backfill", "q_asof_join").foreach { q =>
+      val p = planOf(q)
+      assert(p.contains("AsOfMerge"), s"$q: native as-of missing:\n$p")
+      assert(!p.contains("Scan ExistingRDD"), s"$q: opaque RDD boundary present:\n$p")
+    }
+    // the stages BEHIND the flagship's as-of are visible (no opaque RDD scan
+    // boundary)
     val p = planOf("q_pit_backfill")
-    assert(p.contains("AsOfMerge"), s"native as-of missing:\n$p")
-    // the stages BEHIND the as-of are visible (no opaque RDD scan boundary)
     assert(p.contains("HashAggregate") && p.contains("Window"),
       s"upstream stages hidden behind a scan boundary:\n$p")
-    assert(!p.contains("Scan ExistingRDD"), s"opaque RDD boundary present:\n$p")
   }
 
   // q_feature_importance constructs by TRAINING a model (driver-side

@@ -94,7 +94,7 @@ class PropertySpec extends SparkSpec {
         .toDF("user_id", "event_id", "ts")
       val right = rs.zipWithIndex.map { case ((k, t, v), i) => (k, new Timestamp(t * 1000), (1000 + i).toLong, v) }
         .toDF("user_id", "ts", "event_id", "value")
-      val out = AsOfJoin.merged(left, right, "user_id", "ts", "event_id", Seq("event_id", "value"))
+      val out = graft.plans.AsOfPlan.asOfJoin(left, right, "user_id", "ts", "event_id", Seq("event_id", "value"))
         .collect()
       val rightTs = rs.zipWithIndex.map { case ((k, t, _), i) => (1000L + i) -> (k, t) }.toMap
       val leftTs = ls.zipWithIndex.map { case ((k, t), i) => i.toLong -> (k, t) }.toMap
