@@ -367,8 +367,8 @@ object OracleSql {
       |       ELSE 'Late Night' END AS time_period
       |FROM parsed""".stripMargin
 
-  /** Portable char-fold token hash as SQL (mirrors Dedup.tokHash /
-    * TextAnalysis: acc0=7, acc*31+ascii mod 1000003). */
+  /** Portable char-fold token hash as SQL (mirrors functions.TokHash:
+    * acc0=7, acc*31+ascii mod 1000003). */
   private def sqlTokHash(tokenExpr: String): String =
     s"""list_reduce(list_prepend(CAST(7 AS BIGINT),
        |      list_transform(string_split($tokenExpr, ''), ch -> CAST(ascii(ch) AS BIGINT))),

@@ -264,7 +264,7 @@ object SparkEntry {
       val docs = Pipelines.table(s, dir, "documents")
       val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text",
         shingleK = 3, numHashes = 12, bands = 4)
-      Dedup.ngramJaccard(docs, pairs, "doc_id", "text", n = 1)
+      Dedup.ngramJaccard(docs, pairs, "doc_id", "text")
     }),
     "q_dedup_clusters" -> ((s, dir) =>
       // terminal dedup deliverable: LSH recall -> exact-Jaccard precision ->

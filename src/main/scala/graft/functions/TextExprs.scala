@@ -223,8 +223,8 @@ object TextExprs {
 
   /** Order-sensitive document fingerprint: fold over ' '-tokens (keeping
     * empties), acc = (acc·131 + tokHash(token)) mod 1000003, acc0 = 0 —
-    * the rolling-hash analog, identical arithmetic to the HOF form
-    * (TextAnalysis.fingerprintHof) and the DuckDB oracle. */
+    * the rolling-hash analog, identical arithmetic to the HOF reference form
+    * (HofReference.fingerprintHof, test sources) and the DuckDB oracle. */
   def docFingerprint(s: UTF8String): Long = {
     val str = s.toString
     val n = str.length
@@ -394,7 +394,8 @@ case class MinHashSig(child: Expression, shingleK: Int, numHashes: Int)
   override def inputTypes: Seq[Bridge.AbstractType] = Seq(StringType)
   override def nullIntolerant: Boolean = true
   // seeded affine permutations — SAME constants as the DuckDB oracle
-  // (OracleSql.qMinHashSig) and the retired HOF form (Dedup.minHashSigFromHashes)
+  // (OracleSql.qMinHashSig) and the HOF reference form
+  // (HofReference.minHashSigFromHashes, test sources)
   @transient private lazy val as: Array[Long] =
     (0 until numHashes).map(j => (1223543677L + 2654435761L * j) % 2147483647L).toArray
   @transient private lazy val bs: Array[Long] =

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics: fold over Unicode CODE POINTS, acc0 = 7, acc = (acc*31 + cp)
   * mod 1000003 — EXACTLY the arithmetic the DuckDB oracle writes as
   * `list_reduce(list_prepend(7, list_transform(string_split(t,''), ascii)))`,
-  * and what `graft.ops.Dedup.tokHash` previously built from nested
+  * and what the token-hash helper previously built from nested
   * higher-order functions.
   *
   * Why an Expression and not the HOF composition: the HOF form allocates an

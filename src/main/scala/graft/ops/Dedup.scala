@@ -20,47 +20,14 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Portable token hash: left-fold polynomial over chars, mod 1000003.
-    * Native codegen'd expression (graft.functions.TokHash) — the HOF
-    * composition it replaces was ~100× slower (interpreted char loop). */
-  def tokHash(t: Column): Column = graft.functions.TokHash.tok_hash(t)
-
   /** Exact dedup: one survivor row (min id) per distinct text + dup count. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(col(textCol))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
       .select(col(idCol), col("n_dups"))
 
-  /** Word k-shingles of a text column. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = split(text, " ")
-    // shingle i = tokens[i..i+k): build via transform over 0..n-k
-    filter(
-      transform(sequence(lit(0), greatest(size(toks) - k, lit(0))),
-        i => array_join(slice(toks, i + 1, lit(k)), " ")),
-      s => length(s) > 0)
-  }
-
-  /** Shingle-hash array (HOF form — spec cross-check only; the production
-    * path is the native [[graft.functions.MinHashSig]] expression). */
-  def shingleHashes(text: Column, k: Int): Column =
-    transform(shingles(text, k), s => tokHash(s))
-
-  /** MinHash signature from a stored shingle-hash array: for each of
-    * `numHashes` seeded affine permutations, the min of (a*h + b) mod p.
-    * HOF form — spec cross-check only. */
-  def minHashSigFromHashes(hashes: Column, numHashes: Int): Column = {
-    val p = 2147483647L // 2^31-1 (Mersenne prime)
-    val sig = (0 until numHashes).map { j =>
-      val a = 1223543677L + 2654435761L * j
-      val b = 1327217885L + 40503L * j
-      array_min(transform(hashes, h => pmod(h * lit(a % p) + lit(b % p), lit(p))))
-    }
-    array(sig: _*)
-  }
-
   /** MinHash signature — native one-pass codegen'd expression (same
-    * arithmetic as the HOF form above and the DuckDB oracle). */
+    * arithmetic as the HOF reference form and the DuckDB oracle). */
   def minHashSig(text: Column, k: Int, numHashes: Int): Column =
     graft.functions.TextExprs.minhash_sig(text, k, numHashes)
 
@@ -132,21 +99,6 @@ object Dedup {
       .union(exactEdges)
       .distinct()
   }
-
-  /** 32-bit SimHash from a stored token-hash array (bit votes ±1).
-    * HOF form — spec cross-check only. */
-  def simHashFromHashes(hashes: Column): Column = {
-    val bits = (0 until 32).map { b =>
-      val votes = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-      when(votes > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a + b)
-  }
-
-  /** Token-hash array with bit spreading (HOF cross-check path). */
-  def tokenHashes(text: Column): Column =
-    transform(split(text, " "), t => tokHash(t) * lit(2654435761L))
 
   /** 32-bit SimHash — native one-pass codegen'd expression. */
   def simHash(text: Column): Column = graft.functions.TextExprs.simhash32(text)
@@ -313,11 +265,8 @@ object Dedup {
     * `pairs` carries (id_a, id_b); texts joined in from `df`. Both joins are
     * plain equi-joins on the id — broadcastable when the candidate set or the
     * dictionary side is small. */
-  def ngramJaccard(df: DataFrame, pairs: DataFrame, idCol: String, textCol: String,
-                   n: Int = 1): DataFrame = {
-    val grams = (c: Column) => if (n == 1) array_distinct(split(c, " "))
-      else array_distinct(shingles(c, n))
-    val withSets = df.select(col(idCol), grams(col(textCol)).as("__g"))
+  def ngramJaccard(df: DataFrame, pairs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val withSets = df.select(col(idCol), array_distinct(split(col(textCol), " ")).as("__g"))
     pairs
       .join(withSets.select(col(idCol).as("id_a"), col("__g").as("__ga")), "id_a")
       .join(withSets.select(col(idCol).as("id_b"), col("__g").as("__gb")), "id_b")

@@ -10,17 +10,15 @@ import graft.functions.TextExprs
   * The hot paths are native codegen'd Catalyst expressions
   * (graft.functions.TextExprs): one pass over the string, inside whole-stage
   * codegen, no per-token array allocation. The Spark higher-order-function
-  * forms kept below (suffix `Hof`) are CodegenFallback — round 1 measured
-  * them 1–2 orders of magnitude slower (q_lang_id 74.6 s vs <1 s for 5k
-  * docs) — and now serve only as spec-level cross-checks of the native
-  * expressions. At 100 TB the scan stays a map-only pipelined stage with
-  * column pruning (only `text` is read).
+  * forms they replaced are CodegenFallback — round 1 measured them 1–2
+  * orders of magnitude slower (q_lang_id 74.6 s vs <1 s for 5k docs) — and
+  * live on in the test sources (`graft.HofReference`) as the specs'
+  * cross-checks of the native expressions. At 100 TB the scan stays a
+  * map-only pipelined stage with column pruning (only `text` is read).
   */
 object TextAnalysis {
 
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
-
-  def tokens(text: Column): Column = split(text, " ")
 
   /** Token/char/stopword stats + ratios (exact integer arithmetic, one final
     * double division — oracle-parity safe). */
@@ -49,20 +47,6 @@ object TextAnalysis {
   def withLangId(df: DataFrame, textCol: String = "text", out: String = "lang_pred"): DataFrame =
     df.withColumn(out, TextExprs.lang_id(col(textCol), LangMarkers))
 
-  /** HOF reference form of withLangId — spec cross-check only (slow). */
-  def withLangIdHof(df: DataFrame, textCol: String = "text", out: String = "lang_pred"): DataFrame = {
-    val toks = tokens(col(textCol))
-    val scored = LangMarkers.foldLeft(df) { case (acc, (lang, markers)) =>
-      acc.withColumn(s"__s_$lang", size(filter(toks, t => t.isin(markers.map(lit): _*))))
-    }
-    // fold builds last-wins, so iterate reversed: the FIRST maximal language wins
-    val best = LangMarkers.map(_._1).reverse.foldLeft(lit("und")) { (acc, lang) =>
-      when(col(s"__s_$lang") === greatest(LangMarkers.map(l => col(s"__s_${l._1}")): _*) &&
-        col(s"__s_$lang") > 0, lit(lang)).otherwise(acc)
-    }
-    scored.withColumn(out, best).drop(LangMarkers.map(l => s"__s_${l._1}"): _*)
-  }
-
   /** Composite document-quality gate (the C4/Gopher-style rule stack, kept
     * integer-exact): one point each for sane token count, sane stopword
     * ratio, and confident language id; keep docs scoring >= minScore.
@@ -86,11 +70,6 @@ object TextAnalysis {
     * token hashes (a rolling-hash analog) — cross-engine reproducible (no
     * murmur dependence). Native one-pass codegen'd expression. */
   def fingerprint(text: Column): Column = TextExprs.doc_fingerprint(text)
-
-  /** HOF reference form of [[fingerprint]] — spec cross-check only. */
-  def fingerprintHof(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => pmod(acc * lit(131L) + graft.functions.TokHash.tok_hash(t), lit(1000003L)))
 
   def withFingerprint(df: DataFrame, textCol: String = "text", out: String = "fingerprint"): DataFrame =
     df.withColumn(out, fingerprint(col(textCol)))

@@ -182,21 +182,21 @@ class DedupSpec extends SparkSpec {
     val natSig = m(all.select(col("doc_id"),
       transform(Dedup.minHashSig(col("text"), 3, 12), _.cast("string")).as("s")))
     val hofSig = m(all.select(col("doc_id"),
-      transform(Dedup.minHashSigFromHashes(Dedup.shingleHashes(col("text"), 3), 12),
+      transform(HofReference.minHashSigFromHashes(HofReference.shingleHashes(col("text"), 3), 12),
         _.cast("string")).as("s")))
     assert(natSig == hofSig)
     // simhash
     val natSim = m(all.select(col("doc_id"), Dedup.simHash(col("text")).as("h")))
     val hofSim = m(all.select(col("doc_id"),
-      Dedup.simHashFromHashes(Dedup.tokenHashes(col("text"))).as("h")))
+      HofReference.simHashFromHashes(HofReference.tokenHashes(col("text"))).as("h")))
     assert(natSim == hofSim)
     // lang-id
     val natLang = m(TextAnalysis.withLangId(all).select(col("doc_id"), col("lang_pred")))
-    val hofLang = m(TextAnalysis.withLangIdHof(all).select(col("doc_id"), col("lang_pred")))
+    val hofLang = m(HofReference.withLangIdHof(all).select(col("doc_id"), col("lang_pred")))
     assert(natLang == hofLang)
     // fingerprint (rolling hash)
     val natFp = m(all.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("f")))
-    val hofFp = m(all.select(col("doc_id"), TextAnalysis.fingerprintHof(col("text")).as("f")))
+    val hofFp = m(all.select(col("doc_id"), HofReference.fingerprintHof(col("text")).as("f")))
     assert(natFp == hofFp)
     // token counts
     val natTok = m(all.select(col("doc_id"),
@@ -231,7 +231,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "a", "b")
     val nat = emb.select(col("id"), Similarity.cosine(col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val hof = emb.select(col("id"), Similarity.cosineHof(col("a"), col("b")).as("c"))
+    val hof = emb.select(col("id"), HofReference.cosineHof(col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(nat == hof) // exact double equality — same fold order
   }
@@ -388,7 +388,7 @@ class DedupSpec extends SparkSpec {
     Seq(1, 4, 8, 20).foreach { bits =>
       val mismatch = fvecs.select(
         Similarity.lshBucket(col("emb"), bits, 42L).as("n"),
-        Similarity.lshBucketHof(col("emb"), bits, 42L).as("h"))
+        HofReference.lshBucketHof(col("emb"), bits, 42L).as("h"))
         .filter(col("n") =!= col("h")).count()
       assert(mismatch == 0, s"float path diverges at bits=$bits")
     }
@@ -397,7 +397,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "emb")
     val dMismatch = dvecs.select(
       Similarity.lshBucket(col("emb"), 10, 7L).as("n"),
-      Similarity.lshBucketHof(col("emb"), 10, 7L).as("h"))
+      HofReference.lshBucketHof(col("emb"), 10, 7L).as("h"))
       .filter(col("n") =!= col("h")).count()
     assert(dMismatch == 0, "double path diverges")
     // analysis-time rejection of non-array input
@@ -459,6 +459,23 @@ class DedupSpec extends SparkSpec {
     assert(plan.contains("cosineargmax"), s"native argmax missing:\n$plan")
     assert(!plan.contains("HashAggregate"), s"assignment aggregate resurfaced:\n$plan")
     assert("BroadcastExchange".r.findAllIn(plan).size == 1, s"extra broadcasts:\n$plan")
+  }
+
+  test("ivfTopK rejects a multi-row query before persisting or building anything") {
+    val rnd = new scala.util.Random(29)
+    val emb = (0 until 60).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    graft.ops.StorageScope.global.release()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(emb.filter(col("vec_id") >= 2), "vec_id", "embedding",
+        emb.filter(col("vec_id") < 2), 5, nlist = 4, nprobe = 2)
+    }
+    assert(e.getMessage.contains("single query row"), e.getMessage)
+    assert(graft.ops.StorageScope.global.size == 0, "corpus persist retained")
+    assert(emb.filter(col("vec_id") >= 2).select(col("vec_id"), col("embedding"))
+      .storageLevel == org.apache.spark.storage.StorageLevel.NONE, "corpus cache entry added")
+    assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore, "persistent RDD added")
   }
 
   test("ivf Lloyd refinement: recall improves on a clustered corpus, deterministic") {

@@ -80,6 +80,23 @@ class PlanAuditSpec extends SparkSpec {
       s"upstream stages hidden behind a scan boundary:\n$p")
   }
 
+  test("ANN top-k: single-query forms rank globally, batch forms rank per query") {
+    // one query row ranks with a TakeOrderedAndProject (k rows per
+    // partition, no shuffle); a batch of one through the per-query CosTopK
+    // aggregate measured ~1.5× slower, so the split is pinned here
+    Seq("q_similarity_topk", "q_ann_lsh", "q_ann_ivf").foreach { q =>
+      val p = planOf(q)
+      assert(p.contains("TakeOrderedAndProject"), s"$q: no global top-k:\n$p")
+      assert(!p.contains("ObjectHashAggregate"), s"$q: per-query aggregate:\n$p")
+      assert(!p.contains("hashpartitioning"), s"$q: shuffle exchange:\n$p")
+    }
+    Seq("q_ann_batch", "q_ann_lsh_batch", "q_ann_ivf_batch").foreach { q =>
+      val p = planOf(q)
+      assert(p.contains("ObjectHashAggregate") && p.contains("costopk"),
+        s"$q: no CosTopK aggregate:\n$p")
+    }
+  }
+
   // q_feature_importance constructs by TRAINING a model (driver-side
   // artifact; its final plan is a LocalTableScan) — pointless to plan-audit
   // and expensive to build twice, so both full-surface sweeps skip it.

@@ -130,15 +130,15 @@ class PropertySpec extends SparkSpec {
       m(df.select(col("doc_id"), size(filter(split(col("text"), " "),
         t => t.isin(TextAnalysis.Stopwords.map(lit): _*))).as("v"))), "token_set_count")
     assert(m(TextAnalysis.withLangId(df).select(col("doc_id"), col("lang_pred"))) ==
-      m(TextAnalysis.withLangIdHof(df).select(col("doc_id"), col("lang_pred"))), "lang_id")
+      m(HofReference.withLangIdHof(df).select(col("doc_id"), col("lang_pred"))), "lang_id")
     assert(m(df.select(col("doc_id"),
         transform(Dedup.minHashSig(col("text"), 3, 12), _.cast("string")).as("v"))) ==
       m(df.select(col("doc_id"),
-        transform(Dedup.minHashSigFromHashes(Dedup.shingleHashes(col("text"), 3), 12),
+        transform(HofReference.minHashSigFromHashes(HofReference.shingleHashes(col("text"), 3), 12),
           _.cast("string")).as("v"))), "minhash")
     assert(m(df.select(col("doc_id"), Dedup.simHash(col("text")).as("v"))) ==
       m(df.select(col("doc_id"),
-        Dedup.simHashFromHashes(Dedup.tokenHashes(col("text"))).as("v"))), "simhash")
+        HofReference.simHashFromHashes(HofReference.tokenHashes(col("text"))).as("v"))), "simhash")
     df.unpersist()
   }
 
