@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Driver-contract benchmark: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -116,7 +117,7 @@ object Bench {
     }
 
     // warm the JIT/codegen once with the cheapest query
-    try exec(SparkEntry.queries("q_tumbling_hour")(spark, sfDir)) catch { case _: Throwable => }
+    try exec(SparkEntry.queries("q_tumbling_hour")(spark, sfDir)) catch { case NonFatal(_) => }
 
     // min-of-2 reps per query: single-shot times in a shared JVM carry
     // GC-debt outliers (round 3's driver run read q_pr_curve at 7.1 s where
@@ -139,7 +140,7 @@ object Bench {
       if (isolate) { cur.stop(); cur = session(cpus) }
       val fn = SparkEntry.queries(name)
       val w0 = System.nanoTime()
-      val t = try time(exec(fn(cur, sfDir))) catch { case _: Throwable => -1.0 }
+      val t = try time(exec(fn(cur, sfDir))) catch { case NonFatal(_) => -1.0 }
       System.err.println(f"[bench] $name pass=$pass t=$t%.2f at=${(w0 - jvmT0) / 1e9}%.1f")
       // reset retained storage after every rep so no rep ever times against
       // another query's (or its own earlier rep's) caches — every measurement
@@ -148,7 +149,7 @@ object Bench {
       // session instead of letting the reset's IllegalStateException abort
       // the whole bench (the remaining queries' numbers still get written)
       try resetStorage(cur)
-      catch { case _: Throwable if cur.sparkContext.isStopped => cur = session(cpus) }
+      catch { case NonFatal(_) if cur.sparkContext.isStopped => cur = session(cpus) }
       t
     }
     // The two reps of a query run in two SEPARATED full passes, not
@@ -225,7 +226,7 @@ object Bench {
     // final bare stdout line (build.sbt StdoutOutput keeps it unprefixed).
     // cwd-relative (forked run cwd = repo root) so it works from any checkout
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), json)
-    catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] bench.json write failed: $e") }
     cur.stop()
     println(json)
   }

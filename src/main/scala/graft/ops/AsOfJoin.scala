@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeRowJoiner
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -58,6 +61,34 @@ object AsOfJoin {
         "string / integral / boolean / date / timestamp (BinaryType keys would " +
         "compare by reference and silently mismatch)")
   }
+
+  /** The output kernel all three as-of merges share. One output row is the
+    * memcpy concatenation of the left row and the payload row
+    * (`GenerateUnsafeRowJoiner`, as CartesianProductExec uses it): it copies
+    * both null bitsets, the fixed-width slots and both variable-length
+    * regions, then shifts the variable-length offsets. A projection over a
+    * JoinedRow instead rebuilds the row field by field. Rows that are not
+    * already UnsafeRows are projected to one first; a null payload means
+    * "no match" and joins `nullPay` (build it once with [[nullPayload]]).
+    * The returned row is reused: copy it to retain it. The generated joiner
+    * is not serializable, so create one per task. */
+  private[graft] final class RowJoiner(lSchema: StructType, pSchema: StructType,
+                                       nullPay: UnsafeRow) {
+    private val joiner = GenerateUnsafeRowJoiner.create(lSchema, pSchema)
+    private lazy val lProj = UnsafeProjection.create(lSchema)
+    private lazy val pProj = UnsafeProjection.create(pSchema)
+    def apply(l: InternalRow, pay: InternalRow): UnsafeRow = joiner.join(
+      l match { case u: UnsafeRow => u; case other => lProj(other) },
+      pay match {
+        case null => nullPay
+        case u: UnsafeRow => u
+        case other => pProj(other)
+      })
+  }
+
+  /** The all-null payload row joined to anchors with no match. */
+  private[graft] def nullPayload(pSchema: StructType): UnsafeRow =
+    UnsafeProjection.create(pSchema)(new GenericInternalRow(pSchema.size)).copy()
 
   /** Deduplicate right to one row per (key, ts): greatest rightSeq wins.
     *
@@ -157,7 +188,6 @@ object AsOfJoin {
       .sortWithinPartitions(col("__k"), col("__t"), col("__side"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
     val keyType = sorted.schema("__k").dataType
     val nL = p.lStructType.size
@@ -206,11 +236,9 @@ object AsOfJoin {
     val bcIncoming = spark.sparkContext.broadcast(incoming)
 
     // pass 2: the seeded single-pass InternalRow merge
-    val out = outSchema(p.lStructType, p.pStructType, prefix)
+    val nullPay = nullPayload(p.pStructType)
     val rdd = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(out)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val nullPay = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nP)
+      val join = new RowJoiner(p.lStructType, p.pStructType, nullPay)
       val inc = bcIncoming.value(pid)
       var curKey: Any = null
       var haveKey = false
@@ -226,13 +254,11 @@ object AsOfJoin {
         if (row.getInt(2) == 0) {
           lastPay = row.getStruct(4, nP).copy()
           Iterator.empty
-        } else {
-          joined(row.getStruct(3, nL), if (lastPay == null) nullPay else lastPay)
-          Iterator.single(proj(joined).copy(): InternalRow)
-        }
+        } else Iterator.single(join(row.getStruct(3, nL), lastPay): InternalRow)
       }
     }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, out)
+    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd,
+      outSchema(p.lStructType, p.pStructType, prefix))
   }
 
   /** Variant 3 — broadcast per-key sorted timestamp index + binary search.
@@ -270,9 +296,9 @@ object AsOfJoin {
     val pStructType = r.schema("__p").dataType.asInstanceOf[StructType]
     val pTypes = payload.map(pc => StructField(s"$prefix$pc",
       pStructType(pc).dataType, nullable = true))
-    val outSch = StructType(left.schema.fields ++ pTypes)
-    val nPay = payload.size
-    val nL = left.schema.size
+    val lSchema = left.schema
+    val outSch = StructType(lSchema.fields ++ pTypes)
+    val nL = lSchema.size
     val keyType = left.schema(key).dataType
     // probe side stays InternalRow: tag (__kp, __tp) with a projection, then
     // binary-search the broadcast index per row — map-only, no shuffle, and
@@ -280,18 +306,17 @@ object AsOfJoin {
     val tagged = left.select(
       struct(left.columns.map(col): _*).as("__l"),
       col(key).as("__kp"), micros(col(ts)).as("__tp"))
-    import org.apache.spark.sql.catalyst.InternalRow
+    val nullPay = nullPayload(pStructType)
     val rdd = tagged.queryExecution.toRdd.mapPartitions { it =>
       val idx = bc.value
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outSch)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val nullPay = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nPay)
-      // broadcast payload Rows -> InternalRows once per partition
+      val join = new RowJoiner(lSchema, pStructType, nullPay)
+      // broadcast payload Rows -> UnsafeRows once per partition
       val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
         .createToCatalystConverter(pStructType)
-      val internIdx: Map[Any, (Array[Long], Array[InternalRow])] =
+      val toUnsafe = UnsafeProjection.create(pStructType)
+      val internIdx: Map[Any, (Array[Long], Array[UnsafeRow])] =
         idx.map { case (k, (tsArr, rows)) =>
-          k -> (tsArr, rows.map(r0 => conv(r0).asInstanceOf[InternalRow]))
+          k -> (tsArr, rows.map(r0 => toUnsafe(conv(r0).asInstanceOf[InternalRow]).copy()))
         }
       it.map { row =>
         val l = row.getStruct(0, nL)
@@ -308,11 +333,10 @@ object AsOfJoin {
               val mid = (lo + hi) >>> 1
               if (tsArr(mid) <= tUs) { ans = mid; lo = mid + 1 } else hi = mid - 1
             }
-            if (ans >= 0) payArr(ans) else nullPay
-          case None => nullPay
+            if (ans >= 0) payArr(ans) else null
+          case None => null
         }
-        joined(l, pay)
-        proj(joined).copy(): InternalRow
+        join(l, pay): InternalRow
       }
     }
     org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, outSch)

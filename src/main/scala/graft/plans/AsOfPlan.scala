@@ -9,9 +9,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Pro
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.ops.AsOfJoin
 
 /** The as-of join as a FIRST-CLASS Catalyst operator: a logical node, a
   * planner strategy, and a physical merge exec.
@@ -31,17 +33,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * size). The right-side (key, ts) dedup falls out of the sort for free:
   * ordering by (key, ts, seq) means the LAST row seen for a (key, ts) group
   * has the greatest seq — the documented tiebreak — and simply overwrites
-  * the carried payload.
+  * the carried payload. Only a right row of the anchor's own key becomes
+  * carried state (a row of an earlier key can reach no later anchor), and
+  * it is copied into one reused buffer. Each output row is the memcpy
+  * concatenation of the left UnsafeRow and the payload UnsafeRow
+  * ([[graft.ops.AsOfJoin.RowJoiner]]), not a field-by-field projection;
+  * unmatched anchors join one all-null payload row built on the driver.
+  * The output is emitted in left order, clustered and sorted like the left
+  * child, so a second as-of on the same key and ts reads these rows with no
+  * exchange or sort between. SQL metrics: output rows, right rows (the
+  * partition is read to its end, so the count is exact) and matched
+  * anchors.
   *
   * Semantics (property-tested identical to the other variants in
   * AsOfJoinSpec): for each left row, the payload of the latest right row
   * with the same key and right.ts <= left.ts; null if none; null keys form
   * one group (Window.partitionBy semantics, NOT SQL equi-join nulls).
   *
-  * Skew: ClusteredDistribution keeps a key inside one partition, so a
-  * mega-key lands on one task — same trade as SortMergeJoin. For keys that
-  * dominate partitions, use [[graft.ops.AsOfJoin.mergedScalable]] (range
-  * partitioning + boundary stitching), which stays the documented skew path.
+  * Skew and task count: ClusteredDistribution keeps a key inside one
+  * partition, so a mega-key lands on one task — same trade as
+  * SortMergeJoin. When the merge input is small (a few MB shuffled), AQE
+  * also coalesces every partition into one task, so the per-row cost of the
+  * sweep and the output row build sits on the critical path for all keys,
+  * not only the skewed one. For keys that dominate partitions, use
+  * [[graft.ops.AsOfJoin.mergedScalable]] (range partitioning + boundary
+  * stitching), which stays the documented skew path.
   */
 object AsOfPlan {
 
@@ -60,7 +76,7 @@ object AsOfPlan {
     // same fail-fast contracts as the Dataset-level variants: whitelisted
     // key types (InternalRow equals-comparison soundness) and long-backed
     // timestamps (the merge compares raw micros)
-    graft.ops.AsOfJoin.requireKeyType(left, key, "planned")
+    AsOfJoin.requireKeyType(left, key, "planned")
     Seq(left.schema(ts).dataType, right.schema(ts).dataType).foreach { dt =>
       require(dt == org.apache.spark.sql.types.TimestampType ||
         dt == org.apache.spark.sql.types.TimestampNTZType ||
@@ -141,57 +157,81 @@ case class AsOfMergeExec(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfMergeExec =
     copy(left = newLeft, right = newRight)
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numRightRows" -> SQLMetrics.createMetric(sparkContext, "number of right rows"),
+    "numMatchedRows" -> SQLMetrics.createMetric(sparkContext, "number of matched anchors"))
+
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
-    val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
-    val nPay = payload.size
-    val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
-    val lKeyB = BindReferences.bindReference(leftKey: Expression, lOut)
-    val lTsB = BindReferences.bindReference(leftTs: Expression, lOut)
-    val rKeyB = BindReferences.bindReference(rightKey: Expression, rOut)
-    val rTsB = BindReferences.bindReference(rightTs: Expression, rOut)
+    def ordinal(a: Attribute, out: Seq[Attribute]): Int = out.indexWhere(_.exprId == a.exprId)
+    val (lKeyO, lTsO) = (ordinal(leftKey, lOut), ordinal(leftTs, lOut))
+    val (rKeyO, rTsO) = (ordinal(rightKey, rOut), ordinal(rightTs, rOut))
+    val keyDt = leftKey.dataType
+    val keyOrd = TypeUtils.getInterpretedOrdering(keyDt)
+    def schemaOf(as: Seq[Attribute]) = StructType(as.map(a => StructField(a.name, a.dataType, a.nullable)))
+    val (lSchema, pSchema) = (schemaOf(lOut), schemaOf(outPayload))
     val payB = payload.map(p => BindReferences.bindReference(p: Expression, rOut))
+    val nullPay = AsOfJoin.nullPayload(pSchema)
+    val (numOut, numRight, numMatched) =
+      (longMetric("numOutputRows"), longMetric("numRightRows"), longMetric("numMatchedRows"))
 
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
       val payProj = GenerateUnsafeProjection.generate(payB)
-      val outProj = UnsafeProjection.create(outSchema)
-      val joined = new JoinedRow
-      val nullPay = new GenericInternalRow(nPay)
+      val join = new AsOfJoin.RowJoiner(lSchema, pSchema, nullPay)
       val rBuf = rIt.buffered
-      var lastPay: InternalRow = null
+      val lastPay = nullPay.copy() // byte-array backed, refilled by copyFrom
       var lastKey: Any = null
       var haveLast = false
+      var nOut, nRight, nMatched = 0L
+      var done = false
       // nulls-first three-way compare (SortOrder Ascending default)
       def cmp(a: Any, b: Any): Int =
         if (a == null && b == null) 0
         else if (a == null) -1
         else if (b == null) 1
         else keyOrd.compare(a, b)
-      def tsOf(e: Expression, row: InternalRow): Long = {
-        val v = e.eval(row)
-        if (v == null) Long.MinValue else v.asInstanceOf[Long] // nulls sort first
+      def tsOf(row: InternalRow, o: Int): Long =
+        if (row.isNullAt(o)) Long.MinValue else row.getLong(o) // nulls sort first
+      // count the right rows no anchor reached too, then publish the
+      // task-local counts once per partition
+      def finish(): Unit = if (!done) {
+        done = true
+        while (rBuf.hasNext) { rBuf.next(); nRight += 1 }
+        numOut += nOut; numRight += nRight; numMatched += nMatched
       }
-      lIt.map { l =>
-        val lk = lKeyB.eval(l)
-        val lt = tsOf(lTsB, l)
-        var scanning = true
-        while (scanning && rBuf.hasNext) {
-          val r = rBuf.head
-          val rk = rKeyB.eval(r)
-          val c = cmp(rk, lk)
-          if (c < 0 || (c == 0 && tsOf(rTsB, r) <= lt)) {
-            lastPay = payProj(r).copy()
-            lastKey = rk match {
-              case u: UTF8String => u.clone() // buffer-backed; retain a copy
-              case other => other
+      new Iterator[InternalRow] {
+        override def hasNext: Boolean = lIt.hasNext || { finish(); false }
+        override def next(): InternalRow = {
+          val l = lIt.next()
+          val lk = l.get(lKeyO, keyDt)
+          val lt = tsOf(l, lTsO)
+          var scanning = true
+          while (scanning && rBuf.hasNext) {
+            val r = rBuf.head
+            val rk = r.get(rKeyO, keyDt)
+            val c = cmp(rk, lk)
+            if (c > 0 || (c == 0 && tsOf(r, rTsO) > lt)) scanning = false
+            else {
+              // a right row of an earlier key can reach no anchor (the left
+              // side is sorted too): only same-key rows become state
+              if (c == 0) {
+                lastPay.copyFrom(payProj(r))
+                if (!haveLast || cmp(lastKey, rk) != 0) lastKey = rk match {
+                  case u: UTF8String => u.clone() // buffer-backed; retain a copy
+                  case other => other
+                }
+                haveLast = true
+              }
+              rBuf.next()
+              nRight += 1
             }
-            haveLast = true
-            rBuf.next()
-          } else scanning = false
+          }
+          nOut += 1
+          if (haveLast && cmp(lastKey, lk) == 0) { nMatched += 1; join(l, lastPay) }
+          else join(l, null)
         }
-        val pay = if (haveLast && cmp(lastKey, lk) == 0) lastPay else nullPay
-        outProj(joined(l, pay)): InternalRow
       }
     }
   }

@@ -8,6 +8,12 @@ import graft.ops.AsOfJoin
   * properties (SURVEY §7.4.5). */
 case class AsOfL(user_id: Long, event_id: Long, ts: Timestamp)
 case class AsOfR(user_id: Long, ts: Timestamp, event_id: Long, value: Double)
+/** Variable-length columns on both sides (string, array<int>, struct<string,long>). */
+case class AsOfInfo(s: String, n: Option[Long])
+case class AsOfVL(user_id: Long, event_id: Long, ts: Timestamp, name: String,
+                  tags: Seq[Option[Int]], info: AsOfInfo)
+case class AsOfVR(user_id: Long, ts: Timestamp, event_id: Long, label: String,
+                  vals: Seq[Option[Int]], meta: AsOfInfo)
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -183,6 +189,99 @@ class AsOfJoinSpec extends SparkSpec {
     val self = graft.plans.AsOfPlan.asOfJoin(ev, ev.filter(col("event_id") % 2 === 0),
       "user_id", "ts", "event_id", Seq("event_id"))
     assert(self.count() == left.size)
+  }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The AsOfMerge nodes of the executed plan, looking inside AQE's query
+    * stages (call after an action, so the plan is the final one). */
+  private def merges(df: DataFrame): Seq[graft.plans.AsOfMergeExec] =
+    Aqe.collect(df.queryExecution.executedPlan) { case m: graft.plans.AsOfMergeExec => m }
+
+  private def byEventId(df: DataFrame): Map[Long, Seq[Any]] =
+    df.collect().map(r => r.getLong(r.fieldIndex("event_id")) -> r.toSeq).toMap
+
+  test("variable-length left and payload columns (string, array, struct; nulls inside) " +
+    "join with shifted offsets, incl. anchors with no right row") {
+    val rnd = new scala.util.Random(23)
+    def str(): String = rnd.nextInt(5) match {
+      case 0 => null
+      case 1 => ""
+      case n => ("abcdefghij" * n).take(rnd.nextInt(10 * n) + 1)
+    }
+    def arr(): Seq[Option[Int]] =
+      if (rnd.nextInt(6) == 0) null
+      else Seq.fill(rnd.nextInt(5))(if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(100)))
+    def info(): AsOfInfo =
+      if (rnd.nextInt(6) == 0) null
+      else AsOfInfo(str(), if (rnd.nextInt(3) == 0) None else Some(rnd.nextLong()))
+    // keys 0..7 on the left, 0..4 on the right: keys 5..7 never match, and
+    // anchors earlier than their key's first right row do not either
+    val left = (0 until 240).map(i =>
+      AsOfVL(rnd.nextInt(8).toLong, i.toLong, t(rnd.nextInt(1000).toLong), str(), arr(), info()))
+    val right = (0 until 90).map(i =>
+      AsOfVR(rnd.nextInt(5).toLong, t(rnd.nextInt(1000).toLong), (1000 + i).toLong,
+        str(), arr(), info()))
+    val (lDf, rDf) = (left.toDF(), right.toDF())
+    val payload = Seq("event_id", "label", "vals", "meta")
+    // oracle: left row values ++ the best right row's payload values, as the
+    // collected external Rows represent them
+    val lRows = lDf.collect().map(r => r.getLong(1) -> r.toSeq).toMap
+    val rPay = rDf.collect().map(r => r.getLong(2) -> payload.map(c => r.get(r.fieldIndex(c)))).toMap
+    val expected = left.map { l =>
+      val best = right.filter(r => r.user_id == l.user_id && !r.ts.after(l.ts))
+        .sortBy(r => (r.ts.getTime, r.event_id)).lastOption
+      l.event_id -> (lRows(l.event_id) ++ best.map(b => rPay(b.event_id))
+        .getOrElse(Seq.fill(payload.size)(null)))
+    }.toMap
+    assert(expected.values.exists(_.last == null) && expected.values.exists(_.last != null))
+    val windowed = byEventId(AsOfJoin.windowed(lDf, rDf, "user_id", "ts", "event_id", payload))
+    assert(windowed == expected, "windowed vs in-memory oracle")
+    Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", payload)),
+      "mergedScalable" -> ((l, r) =>
+        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", payload, numPartitions = 3)),
+      "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", payload))
+    ).foreach { case (name, f) =>
+      assert(byEventId(f(lDf, rDf)) == expected, s"variable-length $name")
+    }
+  }
+
+  test("chained as-of: the second merge reads the first one's rows with no exchange or sort between") {
+    val (left, right1) = scenario(31L, nKeys = 6, nLeft = 200, nRight = 80)
+    val right2 = scenario(32L, nKeys = 6, nLeft = 0, nRight = 70)._2
+      .map(r => r.copy(event_id = r.event_id + 5000, value = r.value + 0.5))
+    val (lDf, r1, r2) = (left.toDF(), right1.toDF(), right2.toDF())
+    val pay = Seq("event_id", "value")
+    val chained = graft.plans.AsOfPlan.asOfJoin(
+      graft.plans.AsOfPlan.asOfJoin(lDf, r1, "user_id", "ts", "event_id", pay),
+      r2, "user_id", "ts", "event_id", pay, prefix = "asof2_")
+    val expected = byEventId(AsOfJoin.windowed(
+      AsOfJoin.windowed(lDf, r1, "user_id", "ts", "event_id", pay),
+      r2, "user_id", "ts", "event_id", pay, prefix = "asof2_"))
+    assert(byEventId(chained) == expected)
+    val ms = merges(chained)
+    assert(ms.size == 2, chained.queryExecution.executedPlan.toString)
+    val (outer, inner) = ms.partition(_.outPayload.exists(_.name.startsWith("asof2_")))
+    assert(outer.head.left eq inner.head,
+      s"expected the inner AsOfMerge directly under the outer one:\n${chained.queryExecution.executedPlan}")
+  }
+
+  test("AsOfMerge SQL metrics count output rows, right rows and matched anchors") {
+    // keys 0..5 on the left, right rows only for the keys 0..2 it draws,
+    // plus key 99: it sorts after every anchor key, so no anchor reaches it
+    // and only the read to the end of its partition counts it
+    val (left, right0) = scenario(41L, nKeys = 6, nLeft = 300, nRight = 100)
+    val right = right0.filter(_.user_id < 3) ++
+      Seq(R(99, t(0), 9001, 1.0), R(99, t(1), 9002, 2.0))
+    val df = planned(left.toDF(), right.toDF())
+    df.collect()
+    val matched = inMemory(left, right).values.count(_._1.isDefined)
+    assert(matched > 0 && matched < left.size)
+    val m = merges(df).head.metrics
+    assert(m("numOutputRows").value == left.size)
+    assert(m("numRightRows").value == right.size)
+    assert(m("numMatchedRows").value == matched)
   }
 
   test("broadcastIndex fails fast on an oversized right side and bad key types") {
