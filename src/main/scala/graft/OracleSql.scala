@@ -1027,9 +1027,9 @@ object OracleSql {
     * logistic regression (mirrors `graft.ml.QuantLR` step for step): the 10
     * gradient iterations UNROLL into CTE pairs (qtN = quantized gradient
     * sums, wtN = updated weights). Every arithmetic op is exactly rounded
-    * and executed in the same order as the Spark plan (min-max scaling, one
-    * division; left-associated margin; rational fast-sigmoid; per-row terms
-    * quantized to BIGINT before the sum), so the coefficients — not just the
+    * and executed in the same order as QuantLR.fit's per-row fold (min-max
+    * scaling, one division; left-associated margin; rational fast-sigmoid;
+    * per-row terms quantized to BIGINT before the sum), so the coefficients — not just the
     * ranking — hash-match bit for bit. */
   val qFeatureImportance: String = {
     val feats = Seq("view_count", "click_count", "signup_count")

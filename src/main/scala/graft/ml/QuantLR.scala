@@ -1,7 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Deterministic, CROSS-ENGINE BIT-EXACT logistic regression by full-batch
   * quantized-gradient descent — the engine's oracle-checkable answer to the
@@ -26,11 +26,13 @@ import org.apache.spark.sql.functions._
   *   - weight update `w − lr·((Σq)/2^30/n)` — scalar double ops in a fixed
   *     order.
   *
-  * Scale shape: one tiny min/max agg, then `iters` map-side-combined agg
-  * jobs over a persisted (k+1)-column double projection — no shuffle wider
-  * than one row of partials per partition. Exactness bound: int64→double
+  * Scale shape: the input is planned once into a persisted (k+1)-column
+  * projection; then one min/max/count fold and `iters` gradient folds run
+  * as plain RDD aggregates over it, one job each with no shuffle (each
+  * partition returns k+2 longs to the driver) and no per-iteration query
+  * planning or session-conf change. Exactness bound: int64→double
   * conversion of the gradient sums is exact while `n·2^30 < 2^53`, enforced
-  * at `maxRows` = 2^22; at larger n, lower `quantScale` (precision ↔ scale
+  * at [[MaxRows]] = 2^21; at larger n, lower `quantScale` (precision ↔ scale
   * trade, same knob in the oracle SQL).
   *
   * Quantized GD with a fast-sigmoid link is NOT sklearn's LR — coefficients
@@ -55,7 +57,7 @@ object QuantLR {
   val MaxRows: Long = maxRowsFor(QuantScale)
 
   /** Fit; returns weights with the intercept at index 0. EAGER (runs
-    * 1 + iters tiny jobs over a leaf-materialized projection).
+    * 1 + iters tiny jobs over a persisted projection).
     *
     * `quantScale` is the precision ↔ scale knob the bound's error message
     * points at: lower it (in powers of two) for inputs past `maxRowsFor`;
@@ -75,98 +77,69 @@ object QuantLR {
           "columns keep the cross-engine bit-exactness contract (scale or " +
           "bucketize doubles to counts first)")
     }
-    // ONE materialized narrow projection, as a LEAF RDD-backed table: the
-    // min/max+count agg and every GD iteration read this persisted RDD.
-    //   - the (possibly expensive) upstream plan — e.g. the full slot pivot
-    //     pipeline — is computed exactly once per fit (round 5 paid two full
-    //     upstream computes: the min/max agg, then the z projection's count;
-    //     the row count now rides the same agg as min/max);
-    //   - the leaf CUTS THE LINEAGE out of the 1+iters per-iteration plans:
-    //     with a plain persist, analysis/optimization re-walked the whole
-    //     upstream logical plan on every iteration (~100 ms of driver time
-    //     per action measured — more than the iteration's actual job).
-    // Same materialize-to-leaf pattern as Dedup.connectedComponents.
-    val spark = df.sparkSession
-    val proj = df.select(features.map(f => col(f).cast("long").as(f)) :+
-      col(labelCol).cast("double").as("__y"): _*)
-    val projSchema = proj.schema
-    // toRdd forces physical planning NOW, under the session's normal conf —
-    // the overrides below must never reshape the upstream compute
-    val rdd = proj.queryExecution.toRdd.mapPartitions(_.map(_.copy()))
+    // ONE materialized narrow projection (k longs, then the double label):
+    // the (possibly expensive) upstream plan — e.g. the full slot pivot
+    // pipeline — is planned and computed once per fit; the range pass and
+    // every GD iteration are plain RDD folds over this persist, so no
+    // iteration plans, optimizes or codegens a query. Folds with a zero
+    // value, never `reduce`: a zero-partition input must reach the "empty
+    // input" guard instead of failing inside Spark.
+    val k = features.size
+    val rows = df.select(features.map(f => col(f).cast("long").as(f)) :+
+        col(labelCol).cast("double").as("__y"): _*)
+      .queryExecution.toRdd.mapPartitions(_.map(_.copy()))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = org.apache.spark.sql.graftbridge.Bridge
-      .internalCreateDataFrame(spark, rdd, projSchema)
-    // Conf scoped to the GD loop (restored in finally), both value-neutral:
-    //   - AQE off: every iteration is one single-row global agg over the
-    //     same cached leaf — nothing to re-optimize or coalesce, but
-    //     adaptive execution materializes the exchange as its own job,
-    //     doubling the driver-blocking job count of the sequential loop;
-    //   - ONE reduce partition for that agg's exchange: it carries one
-    //     partial-agg row per map task at any scale, and a single-partition
-    //     final agg also lets head() find the row in its first take-job
-    //     (with 32 reduce partitions the single group hashes to an arbitrary
-    //     partition and executeTake pays a second, empty-scan job).
-    val overrides = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "1")
-    val prev = overrides.map { case (k, _) => k -> spark.conf.get(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val mmAggs = features.flatMap(f =>
-        Seq(min(col(f)), max(col(f)))) :+ count(lit(1))
-      val mm = p.agg(mmAggs.head, mmAggs.tail: _*).head()
-      val n = mm.getLong(2 * features.size)
+      // per-feature min/max over the non-null values (an all-null feature
+      // keeps mn > mx) and the count of ALL rows
+      val (mn, mx, n) = rows.aggregate(
+          (Array.fill(k)(Long.MaxValue), Array.fill(k)(Long.MinValue), 0L))(
+        { case ((lo, hi, c), row) =>
+          for (i <- 0 until k if !row.isNullAt(i)) {
+            lo(i) = math.min(lo(i), row.getLong(i)); hi(i) = math.max(hi(i), row.getLong(i))
+          }
+          (lo, hi, c + 1) },
+        { case ((lo, hi, c), (lo2, hi2, c2)) =>
+          (Array.tabulate(k)(i => math.min(lo(i), lo2(i))),
+            Array.tabulate(k)(i => math.max(hi(i), hi2(i))), c + c2) })
       require(n > 0, "QuantLR.fit: empty input")
-      // min() over an all-null feature COLUMN in a non-empty input is null;
-      // check every feature's min slot and fail with the friendly message
-      // rather than an opaque NPE from getLong below
       features.indices.foreach { i =>
-        require(!mm.isNullAt(2 * i),
-          s"QuantLR.fit: empty input or all-null feature '${features(i)}'")
+        require(mn(i) <= mx(i), s"QuantLR.fit: empty input or all-null feature '${features(i)}'")
       }
       require(n <= maxRowsFor(quantScale),
         s"QuantLR.fit: $n rows exceeds the exact-sum bound ${maxRowsFor(quantScale)} " +
           s"for quantScale=$quantScale — pass a lower quantScale (and regenerate " +
           "the oracle SQL with the same scale)")
-      val zCols = features.indices.map { i =>
-        val mn = mm.getLong(2 * i)
-        val mx = mm.getLong(2 * i + 1)
-        val z = if (mx == mn) lit(0.0)
-          else (col(features(i)) - lit(mn)).cast("double") / lit((mx - mn).toDouble)
-        z.as(s"z$i")
-      }
-      val z = p.select(zCols :+ col("__y"): _*)
+      val span = Array.tabulate(k)(i => (mx(i) - mn(i)).toDouble) // 0.0 iff constant
       val nD = n.toDouble
-      val w = Array.fill(features.size + 1)(0.0)
-      // The per-iteration weights ride a 1-row broadcast relation instead of
-      // being inlined as literals: literal weights change every iteration, so
-      // each of the `iters` plans generated DIFFERENT codegen source and paid
-      // a fresh Janino compile (~100 ms/iteration measured — half the round-5
-      // query time was this driver-side gap between jobs). With weight
-      // COLUMNS the generated source is identical across iterations and the
-      // codegen cache hits after iteration 1. Arithmetic is value-identical:
-      // the same IEEE doubles flow through the same op sequence.
-      val wSchema = org.apache.spark.sql.types.StructType(
-        w.indices.map(j => org.apache.spark.sql.types.StructField(
-          s"__w$j", org.apache.spark.sql.types.DoubleType, nullable = false)))
+      val w = Array.fill(k + 1)(0.0)
       for (_ <- 1 to iters) {
-        val wDf = spark.createDataFrame(
-          java.util.Collections.singletonList(
-            org.apache.spark.sql.Row.fromSeq(w.toIndexedSeq)), wSchema)
-        var m: Column = col("__w0")
-        features.indices.foreach(i => m = m + col(s"__w${i + 1}") * col(s"z$i"))
-        val sig = lit(0.5) + (lit(0.5) * m) / (lit(1.0) + abs(m))
-        val r = sig - col("__y")
-        val terms = r +: features.indices.map(i => r * col(s"z$i"))
-        val aggs = terms.map(t => sum(floor(t * lit(quantScale))))
-        val row = z.crossJoin(broadcast(wDf)).agg(aggs.head, aggs.tail: _*).head()
+        val wi = w.clone()
+        // one job: each row adds floor(term · scale) into q(0..k) and counts
+        // itself in q(k+1), in the oracle SQL's IEEE op order — z-scaling
+        // (0.0 for a constant feature even where x is null), left-associated
+        // margin, fast sigmoid. A null label or non-constant feature drops
+        // the row from every sum, as SQL's SUM skips its null terms.
+        val q = rows.aggregate(new Array[Long](k + 2))({ (q, row) =>
+          if (!row.isNullAt(k) && (0 until k).forall(i => span(i) == 0.0 || !row.isNullAt(i))) {
+            val z = Array.tabulate(k)(i =>
+              if (span(i) == 0.0) 0.0 else (row.getLong(i) - mn(i)).toDouble / span(i))
+            val m = (0 until k).foldLeft(wi(0))((m, i) => m + wi(i + 1) * z(i))
+            val r = (0.5 + (0.5 * m) / (1.0 + math.abs(m))) - row.getDouble(k)
+            q(0) = Math.addExact(q(0), math.floor(r * quantScale).toLong)
+            for (i <- 0 until k)
+              q(i + 1) = Math.addExact(q(i + 1), math.floor((r * z(i)) * quantScale).toLong)
+            q(k + 1) += 1
+          }
+          q
+        }, (a, b) => { for (j <- a.indices) a(j) = Math.addExact(a(j), b(j)); a })
+        require(q(k + 1) > 0, "QuantLR.fit: no row has a non-null label and " +
+          "non-null values in every non-constant feature")
         for (j <- w.indices)
-          w(j) = w(j) - lr * (row.getLong(j).toDouble / quantScale / nD)
+          w(j) = w(j) - lr * (q(j).toDouble / quantScale / nD)
       }
       w
-    } finally {
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
-      rdd.unpersist(blocking = false)
-    }
+    } finally rows.unpersist(blocking = false)
   }
 
   /** Top-k |coefficient| ranking artifact (`LR_Advanced.py:566-601`):

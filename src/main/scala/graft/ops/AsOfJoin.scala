@@ -167,8 +167,11 @@ object AsOfJoin {
     *   pass 2: the normal single-pass merge, seeded with the incoming state.
     *
     * Parallel-prefix-sum shape: work is proportional to rows per PARTITION,
-    * not rows per KEY. Both passes scan the same sorted shuffle output
-    * (persisted). Property-tested identical to the planned exec incl.
+    * not rows per KEY. Both passes scan the same sorted shuffle output,
+    * persisted and retained in [[StorageScope.global]]: the returned plan
+    * reads it, so the session owner frees it with
+    * `StorageScope.global.release()` once the result is consumed.
+    * Property-tested identical to the planned exec incl.
     * mega-key fixtures.
     *
     * Payload columns must be orderable; a duplicate-`rightSeq` tie within one
@@ -183,10 +186,10 @@ object AsOfJoin {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val sorted = p.union
+    val sorted = StorageScope.global.retain(p.union
       .repartitionByRange(parts, col("__k"), col("__t"), col("__side"))
       .sortWithinPartitions(col("__k"), col("__t"), col("__side"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     import org.apache.spark.unsafe.types.UTF8String
     val keyType = sorted.schema("__k").dataType
@@ -233,13 +236,15 @@ object AsOfJoin {
         // else: same key continues with no new state -> carry unchanged
       }
     }
-    val bcIncoming = spark.sparkContext.broadcast(incoming)
 
-    // pass 2: the seeded single-pass InternalRow merge
+    // pass 2: the seeded single-pass InternalRow merge. `incoming` holds P
+    // entries (P = range partitions), so it ships inside the task closure,
+    // as PrefixSum's offsets do; a broadcast would outlive the call with no
+    // owner to destroy it.
     val nullPay = nullPayload(p.pStructType)
     val rdd = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       val join = new RowJoiner(p.lStructType, p.pStructType, nullPay)
-      val inc = bcIncoming.value(pid)
+      val inc = incoming(pid)
       var curKey: Any = null
       var haveKey = false
       var lastPay: InternalRow = null

@@ -99,6 +99,25 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  test("mergedScalable: releasing StorageScope.global after the result is consumed leaves no cache behind") {
+    val (left, right) = scenario(6L, nKeys = 5, nLeft = 200, nRight = 80)
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    // numCachedEntries is private[sql] in Scala but public in bytecode
+    def cachedEntries = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    graft.ops.StorageScope.global.release()
+    val cachedBefore = cachedEntries
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val got = run((l, r) =>
+      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
+        numPartitions = 4), left, right)
+    assert(got == inMemory(left, right))
+    graft.ops.StorageScope.global.release()
+    assert(cachedEntries == cachedBefore, "cache manager entry left behind")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "persistent RDD left behind")
+  }
+
   test("inclusive at equal timestamps; greatest-seq tiebreak among right dups") {
     val left = Seq(L(1, 10, t(100)))
     val right = Seq(R(1, t(100), 1001, 5.0), R(1, t(100), 1002, 7.0), R(1, t(101), 1003, 9.0))

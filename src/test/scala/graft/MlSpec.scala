@@ -239,6 +239,72 @@ class MlSpec extends SparkSpec {
       graft.ml.QuantLR.maxRowsFor(graft.ml.QuantLR.QuantScale))
   }
 
+  test("QuantLR ≡ the SQL-form reference bit-for-bit under null features, null labels " +
+    "and a constant feature with nulls; no persist left behind") {
+    // each kind of null on its own, then all together; each input also
+    // repartitioned, since only the quantized integer sums make it invariant
+    def input(nullFeat: Boolean, nullLabel: Boolean, nullConst: Boolean) = {
+      val rnd = new scala.util.Random(23)
+      def maybe[T](on: Boolean, every: Int, v: T): Option[T] =
+        if (on && rnd.nextInt(every) == 0) None else Some(v)
+      (1 to 600).map { i =>
+        val a = rnd.nextInt(40).toLong; val b = rnd.nextInt(40).toLong
+        val y = if (a - b + rnd.nextInt(20) - 10 > 0) 1 else 0
+        (i.toLong, maybe(nullFeat, 9, a), maybe(nullFeat, 13, b), maybe(nullConst, 5, 3L),
+          maybe(nullLabel, 11, y))
+      }.toDF("id", "a", "b", "c", "y")
+    }
+    def bits(w: Array[Double]) = w.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val feats = Seq("a", "b", "c")
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    for ((nf, nl, nc) <- Seq((true, false, false), (false, true, false),
+                             (false, false, true), (true, true, true))) {
+      val df = input(nf, nl, nc)
+      val want = QuantLRReference.fit(df, feats, "y")
+      assert(want.exists(_ != 0.0))
+      for (in <- Seq(df, df.repartition(7)))
+        assert(bits(graft.ml.QuantLR.fit(in, feats, "y")) == bits(want),
+          s"nulls (features $nf, labels $nl, constant $nc), ${in.rdd.getNumPartitions} partitions")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "fit left a persist behind")
+    // a guard firing after the persist still releases it
+    val nullCol = Seq((1L, 1L, Option.empty[Long], 1), (2L, 2L, Option.empty[Long], 0))
+      .toDF("id", "f1", "f2", "y")
+    intercept[IllegalArgumentException](graft.ml.QuantLR.fit(nullCol, Seq("f1", "f2"), "y"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "guard left a persist behind")
+    // no row can contribute: a friendly failure, not weights that never moved
+    val noLabel = Seq((1L, 1L, Option.empty[Int]), (2L, 2L, Option.empty[Int])).toDF("id", "f", "y")
+    val e = intercept[IllegalArgumentException](graft.ml.QuantLR.fit(noLabel, Seq("f"), "y"))
+    assert(e.getMessage.contains("non-null label"), e.getMessage)
+  }
+
+  test("QuantLR.fit leaves session conf unchanged while its jobs run") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = keys.map(k => spark.conf.get(k))
+    val readings = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          markerSeen.countDown()
+        else readings.add(keys.map(k => spark.conf.get(k)))
+    }
+    val df = (1 to 300).map(i => (i.toLong, (i % 17).toLong, i % 3 % 2)).toDF("id", "a", "y")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      graft.ml.QuantLR.fit(df, Seq("a"), "y")
+      // the bus delivers events in order on its own thread: once the marker
+      // job's start arrives, every job of the fit has been read
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+    assert(!readings.isEmpty, "no job observed")
+    readings.forEach(r => assert(r == before, s"a fit job saw ${keys.zip(r)}, not ${keys.zip(before)}"))
+  }
+
   test("feature importance ranks by |coef| with deterministic name tie-break") {
     val fi = Models.featureImportance(
       Map("a" -> 0.5, "b" -> -0.9, "d" -> -0.1, "c" -> 0.1), topK = 3)
