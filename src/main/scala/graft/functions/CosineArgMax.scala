@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,9 +53,8 @@ object Centroids {
   * nlist of 4k-64k lists. Here the centroid table rides the expression as a
   * reference object (same mechanism as Spark's `InSet`), so assignment is
   * one map-only pass with zero row amplification. The reference object ships
-  * once per task closure; for very large quantizers use
-  * [[CosineArgMax.cosine_argmax_bcast]], which ships a `Broadcast[Centroids]`
-  * handle instead (one torrent transfer per executor, not per task).
+  * once per task closure, which is cheap at the nlist `ivfLists` builds; a
+  * quantizer too large for that would ship as a broadcast handle instead.
   *
   * Arithmetic parity: per centroid, EXACTLY the [[CosineSim]] sequential
   * fold (row float→double, left-to-right, independent norms; centroid
@@ -79,35 +77,6 @@ case class CosineArgMax(child: Expression, centroids: Centroids)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CosineArgMax =
-    copy(child = newChild)
-}
-
-/** [[CosineArgMax]] over a broadcast centroid table — the large-quantizer
-  * variant: tasks carry only the broadcast handle; the table transfers once
-  * per executor. Equality is by broadcast id (two expressions over the same
-  * broadcast canonicalize together). */
-case class CosineArgMaxBcast(child: Expression, bc: Broadcast[Centroids])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def inputTypes: Seq[Bridge.AbstractType] = Seq(ArrayType(FloatType))
-  override def nullIntolerant: Boolean = true
-
-  protected override def nullSafeEval(a: Any): Any = {
-    val c = bc.value
-    CosineArgMax.argmax(a.asInstanceOf[ArrayData], c.ids, c.embs)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("centroidsBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
-    // resolve the broadcast ONCE per generated-class instance, not per row
-    val cents = ctx.addMutableState("graft.functions.Centroids", "centroids",
-      v => s"$v = (graft.functions.Centroids) $bcRef.value();")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CosineArgMax.argmax($c, $cents.ids(), $cents.embs())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CosineArgMaxBcast =
     copy(child = newChild)
 }
 
@@ -157,10 +126,4 @@ object CosineArgMax {
 
   def cosine_argmax(emb: Column, centroids: Seq[(Long, Array[Double])]): Column =
     Bridge.column(CosineArgMax(Bridge.expression(emb), Centroids(centroids)))
-
-  /** Broadcast-backed variant for production-sized quantizers (nlist in the
-    * tens of thousands): `cosine_argmax_bcast(emb, spark.sparkContext
-    * .broadcast(Centroids(cents)))`. */
-  def cosine_argmax_bcast(emb: Column, bc: Broadcast[Centroids]): Column =
-    Bridge.column(CosineArgMaxBcast(Bridge.expression(emb), bc))
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ThresholdBucket
 
 /** Evaluation-framework dataflow operators (`LR_Model_train/LR_Advanced.py:
   * 656-677`, `OOF_AUC_test.py:336-371`) as distributed aggregations — the
@@ -45,11 +46,11 @@ object Metrics {
         lit(2.0) * d(col("tp")) + d(col("fp")) + d(col("fn"))).as("f1"))
   }
 
-  /** Distinct-score histogram: per score value, total rows and positives.
-    * The first stage of every rank-based metric — map-side combined, so the
-    * shuffle carries |distinct scores| rows, not |rows|. */
-  private def scoreHistogram(df: DataFrame, label: String, score: String): DataFrame =
-    df.groupBy(col(score).as("__s")).agg(
+  /** Per grouping key, total rows `__n` and positives `__p`. The first stage
+    * of every rank-based metric — map-side combined, so the shuffle carries
+    * one row per key (distinct score or threshold bucket), not per row. */
+  private def histogram(df: DataFrame, label: String, key: Column): DataFrame =
+    df.groupBy(key).agg(
       count(lit(1)).as("__n"),
       sum(when(col(label) === 1, 1L).otherwise(0L)).as("__p"))
 
@@ -62,7 +63,7 @@ object Metrics {
     * p·(cum_before + (n+1)/2) is a multiple of 0.5 — exactly representable,
     * making the double sum order-independent and oracle-hash-stable. */
   def aucRoc(df: DataFrame, label: String, score: String): DataFrame = {
-    val cum = PrefixSum.runningSums(scoreHistogram(df, label, score), Seq(col("__s")), Seq("__n"))
+    val cum = PrefixSum.runningSums(histogram(df, label, col(score).as("__s")), Seq(col("__s")), Seq("__n"))
     val contrib = col("__p").cast("double") *
       ((col("__n_cum") - col("__n")).cast("double") + (col("__n").cast("double") + 1.0) / 2.0)
     cum.agg(
@@ -86,70 +87,32 @@ object Metrics {
   }
 
   /** F1 over a threshold grid (the 99-threshold scan, `OOF_AUC_test.py:355-
-    * 364`). Histogram-first: the 99× row amplification hits the DISTINCT-
-    * SCORE table, not the scan (round 1 cross-joined the full input).
-    *
-    * Continuous-score guard (mirrors [[averagePrecision]]'s): for continuous
-    * double scores the "distinct-score table" is |rows|-sized and the grid
-    * amplification becomes 99×|rows|. Round-4 shape ran a SEPARATE HLL probe
-    * job over the full input to decide; the guard now folds into the
-    * histogram pass itself (round-4 advice): the exact histogram is built
-    * once, persisted, and counted — that count IS the distinct-score count
-    * (exact, so the switch needs no estimate fudge factor and engages
-    * exactly at the gate, same semantics as [[guardedCumulative]]'s carry).
-    * Over the gate, the 99× grid joins a `floor(score·quantizeBins)/
-    * quantizeBins` re-aggregation OF THE CACHED HISTOGRAM (bounded output,
-    * no second input scan); quantized F1 is an approximation (each score
-    * snaps down to its grid point before the >= comparison). Net: ONE full
-    * input pass where round 4 paid two. What stays persisted (registered
-    * with `scope` — released by Bench between reps / callers that manage
-    * lifetimes) is always BOUNDED: max(maxDistinctScores, quantizeBins+1)
-    * rows — the input-sized exact histogram is cached only transiently
-    * during construction. EAGER: the count job(s) run at construction. */
+    * 364`) as one exact, lazy sweep: no job at construction, nothing cached.
+    * The thresholds are sorted and deduplicated the way Spark groups doubles
+    * (−0.0 = 0.0, NaN = NaN). Each row's bucket `b` = |{t : score >= t}|
+    * under Spark's `>=` ([[ThresholdBucket]]; NaN is above every number); the
+    * ≤ |thresholds|+2-row histogram over `b` crosses the broadcast thresholds
+    * (index `i`): tp = Σp and fp = Σ(n − p) over b > i, fn = Σp over b ≤ i.
+    * A null score is counted nowhere; a null label counts as a negative. */
   def thresholdScan(df: DataFrame, label: String, score: String,
-                    thresholds: Seq[Double],
-                    maxDistinctScores: Long = 1L << 20,
-                    quantizeBins: Int = 100000,
-                    scope: StorageScope = StorageScope.global): DataFrame = {
+                    thresholds: Seq[Double]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val th = thresholds.toDF("threshold")
-    // The exact histogram is |distinct scores|-sized — input-sized for
-    // continuous doubles, i.e. exactly the table the guard exists to keep
-    // bounded. It is persisted only TRANSIENTLY (count + at most one bounded
-    // re-aggregation read it, then it is dropped); what stays retained in
-    // `scope` is always bounded: either the exact histogram when it proved
-    // ≤ maxDistinctScores rows, or the ≤ quantizeBins+1-row quantized
-    // re-aggregation. Net cost is unchanged (ONE full input pass); the
-    // input-sized cache no longer outlives construction.
-    val g = scoreHistogram(df, label, score).persist()
-    val hist =
-      try {
-        val distinct = g.count()
-        if (distinct <= maxDistinctScores) scope.retain(g)
-        else {
-          val q = scope.retain(
-            g.groupBy((floor(col("__s") * quantizeBins) / quantizeBins).as("__s"))
-              .agg(sum(col("__n")).as("__n"), sum(col("__p")).as("__p"))
-              .persist())
-          q.count() // materialize FROM the exact cache before dropping it
-          g.unpersist(blocking = false)
-          q
-        }
-      } catch { case t: Throwable => g.unpersist(blocking = false); throw t }
-    hist
-      .withColumn("__gn", col("__n") - col("__p"))
+    val ts = thresholds.map(t => java.lang.Double.doubleToLongBits(if (t == 0.0) 0.0 else t))
+      .distinct.map(java.lang.Double.longBitsToDouble).sorted(Ordering.Double.TotalOrdering)
+    val th = ts.zipWithIndex.toDF("threshold", "__i")
+    val above = col("__b") > col("__i")
+    val Seq(tp, fp, fn) = Seq("tp", "fp", "fn").map(c => col(c).cast("double"))
+    val den = lit(2.0) * tp + fp + fn
+    histogram(df, label, ThresholdBucket.threshold_bucket(col(score).cast("double"), ts).as("__b"))
       .crossJoin(broadcast(th))
       .groupBy(col("threshold"))
       .agg(
-        sum(when(col("__s") >= col("threshold"), col("__p")).otherwise(0L)).as("tp"),
-        sum(when(col("__s") >= col("threshold"), col("__gn")).otherwise(0L)).as("fp"),
-        sum(when(col("__s") < col("threshold"), col("__p")).otherwise(0L)).as("fn"))
+        sum(when(above, col("__p")).otherwise(0L)).as("tp"),
+        sum(when(above, col("__n") - col("__p")).otherwise(0L)).as("fp"),
+        sum(when(col("__b") <= col("__i"), col("__p")).otherwise(0L)).as("fn"))
       .select(col("threshold"), col("tp"), col("fp"), col("fn"),
-        when(lit(2.0) * col("tp").cast("double") + col("fp").cast("double") + col("fn").cast("double") > 0.0,
-          (lit(2.0) * col("tp").cast("double")) /
-            (lit(2.0) * col("tp").cast("double") + col("fp").cast("double") + col("fn").cast("double")))
-          .as("f1"))
+        when(den > 0.0, (lit(2.0) * tp) / den).as("f1"))
   }
 
   /** Guarded cumulative score table for PR metrics: descending prefix sums
@@ -165,7 +128,7 @@ object Metrics {
   private def guardedCumulative(df: DataFrame, label: String, score: String,
                                 maxDistinctScores: Long,
                                 quantizeBins: Int): (DataFrame, Long) = {
-    val g0 = scoreHistogram(df, label, score).withColumn("__one", lit(1L))
+    val g0 = histogram(df, label, col(score).as("__s")).withColumn("__one", lit(1L))
     val (cum0, tot0) =
       PrefixSum.runningSumsWithTotals(g0, Seq(col("__s").desc), Seq("__n", "__p", "__one"))
     if (tot0("__one") <= maxDistinctScores)

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * (collect-style aggs, exact distincts) or when a single reduce-side key
   * group must be parallelized. `saltedAggregate` is the classic two-phase
   * shape: group on (key, salt) → partial rows → group on key → final
-  * combine. Only ALGEBRAIC aggregates survive this factoring; avg is done
-  * as sum+count (re-associated exactly — integer sums, so no float drift).
+  * combine. Only ALGEBRAIC aggregates survive this factoring; a mean is
+  * `sumL` + `countAll` divided by the caller (integer sums re-associate
+  * exactly, so no float drift).
   *
   * AQE's runtime skew-join splitting is enabled session-wide (Bench.session
   * and the backfill configs set spark.sql.adaptive.enabled); salting here
@@ -43,15 +44,5 @@ object Skew {
     p1.groupBy(keys.map(col): _*)
       .agg(aggs.head.combine(col(aggs.head.name)).as(aggs.head.name),
         aggs.tail.map(a => a.combine(col(a.name)).as(a.name)): _*)
-  }
-
-  /** Salted mean as exact (sum, count) pair — associative re-rollup. */
-  def saltedMean(df: DataFrame, keys: Seq[String], saltSrc: String, salts: Int,
-                 valueCol: String, out: String): DataFrame = {
-    val salted = df.withColumn("__salt", saltOf(col(saltSrc), salts))
-    salted.groupBy((keys :+ "__salt").map(col): _*)
-      .agg(sum(col(valueCol).cast("long")).as("__s"), count(lit(1)).as("__n"))
-      .groupBy(keys.map(col): _*)
-      .agg((sum(col("__s")).cast("double") / sum(col("__n")).cast("double")).as(out))
   }
 }

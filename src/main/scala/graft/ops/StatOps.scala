@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Statistical cleaning / screening operators from the reference's feature-
@@ -64,14 +64,6 @@ object StatOps {
             (col(s"__s_$c").cast("double") / col("__n").cast("double"))).as("variance"))
     }
     t.select(explode(array(rows: _*)).as("r")).select(col("r.feature"), col("r.variance"))
-  }
-
-  /** Columns passing the variance threshold, in original column order
-    * (`LR_Advanced.py:500-508` — order matters: the first 12 survivors feed
-    * the interaction generator). */
-  def highVarianceCols(df: DataFrame, cols: Seq[String], threshold: Double): Seq[String] = {
-    val v = varianceScreen(df, cols).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    cols.filter(c => v(c) > threshold)
   }
 
   /** Standard scaling ((x - mean) / stddev_samp, `LR_Advanced.py:621-623`)

@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.Bucketing
 
+/** Rest layouts the planner exploits: `bucketBy` the high-cardinality join
+  * key (co-bucketed tables join and aggregate without an Exchange, and a
+  * bucket-key equality prunes the scan to one bucket); `partitionBy` a
+  * low-cardinality filter column (the reader prunes whole directories). */
 class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,14 +32,16 @@ class BucketingSpec extends SparkSpec {
     val facts = (0L until 2000L).map(i => (i % 97, i, i * 3 % 1000)).toDF("user_id", "event_id", "v")
     val dims = (0L until 97L).map(i => (i, s"seg${i % 5}")).toDF("user_id", "segment")
     // same key, same bucket count on both sides — the co-location contract
-    Bucketing.writeBucketed(facts, "b_facts", s"$base/facts", "user_id", 8)
-    Bucketing.writeBucketed(dims, "b_dims", s"$base/dims", "user_id", 8)
+    facts.write.mode("overwrite").option("path", s"$base/facts")
+      .bucketBy(8, "user_id").sortBy("user_id").saveAsTable("b_facts")
+    dims.write.mode("overwrite").option("path", s"$base/dims")
+      .bucketBy(8, "user_id").sortBy("user_id").saveAsTable("b_dims")
     // force a sort-merge join so the ONLY thing that can elide the shuffle
     // is the bucket layout (a broadcast would trivially avoid it)
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
              "spark.sql.adaptive.enabled" -> "false") {
-      val joined = Bucketing.table(spark, "b_facts")
-        .join(Bucketing.table(spark, "b_dims"), "user_id")
+      val joined = spark.table("b_facts")
+        .join(spark.table("b_dims"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
       assert(!plan.contains("Exchange"),
@@ -65,7 +70,7 @@ class BucketingSpec extends SparkSpec {
     val events = (0L until 3000L)
       .map(i => (i, Seq("view", "click", "purchase")(i.toInt % 3), i % 17))
       .toDF("event_id", "event_type", "user_id")
-    Bucketing.writePartitioned(events, s"$base/events", Seq("event_type"))
+    events.write.mode("overwrite").partitionBy("event_type").parquet(s"$base/events")
     val read = spark.read.parquet(s"$base/events")
       .filter(col("event_type") === "purchase")
     val plan = read.queryExecution.executedPlan.toString
@@ -77,7 +82,7 @@ class BucketingSpec extends SparkSpec {
     assert(read.count() == 1000L)
     // a shard-partitioned curation-style write round-trips with shard intact
     val curated = (0L until 100L).map(i => (i, i % 8)).toDF("doc_id", "shard")
-    Bucketing.writePartitioned(curated, s"$base/curated", Seq("shard"))
+    curated.write.mode("overwrite").partitionBy("shard").parquet(s"$base/curated")
     val one = spark.read.parquet(s"$base/curated").filter(col("shard") === 3)
     assert(one.select("doc_id").as[Long].collect().toSet ==
       (0L until 100L).filter(_ % 8 == 3).toSet)
@@ -97,7 +102,8 @@ class BucketingSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val bucketed = emb.withColumn("lsh_b",
       graft.ops.Similarity.lshBucket(col("embedding"), bits, seed))
-    Bucketing.writeBucketed(bucketed, "b_ann", s"$base/t", "lsh_b", 8)
+    bucketed.write.mode("overwrite").option("path", s"$base/t")
+      .bucketBy(8, "lsh_b").sortBy("lsh_b").saveAsTable("b_ann")
     val query = emb.filter(col("vec_id") === 0L)
     val qb = bucketed.filter(col("vec_id") === 0L)
       .select(col("lsh_b")).head().getLong(0)
@@ -109,7 +115,7 @@ class BucketingSpec extends SparkSpec {
              "spark.sql.adaptive.enabled" -> "false",
              "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val qv = query.select(col("embedding")).as[Array[Float]].head()
-      val probe = Bucketing.table(spark, "b_ann")
+      val probe = spark.table("b_ann")
         .filter(col("lsh_b") === qb && col("vec_id") =!= 0L)
         .select(col("vec_id"),
           graft.ops.Similarity.cosine(col("embedding"),
@@ -136,9 +142,10 @@ class BucketingSpec extends SparkSpec {
     withTables("b_agg") {
     val base = java.nio.file.Files.createTempDirectory("bucketing_agg").toString
     val facts = (0L until 2000L).map(i => (i % 53, i)).toDF("user_id", "event_id")
-    Bucketing.writeBucketed(facts, "b_agg", s"$base/t", "user_id", 8)
+    facts.write.mode("overwrite").option("path", s"$base/t")
+      .bucketBy(8, "user_id").sortBy("user_id").saveAsTable("b_agg")
     withConf("spark.sql.adaptive.enabled" -> "false") {
-      val agg = Bucketing.table(spark, "b_agg")
+      val agg = spark.table("b_agg")
         .groupBy("user_id").agg(count(lit(1)).as("n"))
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),

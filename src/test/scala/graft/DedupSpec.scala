@@ -576,17 +576,6 @@ class DedupSpec extends SparkSpec {
     val b = graft.functions.CosineArgMax(e, graft.functions.Centroids(cents2))
     assert(a == b && a.hashCode == b.hashCode,
       "semantically identical argmax expressions must compare equal (CSE/canonicalization)")
-    // broadcast-backed variant: same assignments, table ships once per executor
-    val df = Seq((1L, Array(1.0f, 0.1f)), (2L, Array(0.1f, 1.0f))).toDF("id", "emb")
-    val bc = spark.sparkContext.broadcast(graft.functions.Centroids(cents1))
-    val direct = df.select(col("id"),
-      graft.functions.CosineArgMax.cosine_argmax(col("emb"), cents1).as("l"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaBc = df.select(col("id"),
-      graft.functions.CosineArgMax.cosine_argmax_bcast(col("emb"), bc).as("l"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(direct == viaBc && direct == Map(1L -> 1L, 2L -> 2L))
-    bc.destroy()
   }
 
   test("CosineArgMax breaks cosine ties to the lowest centroid id") {

@@ -150,17 +150,87 @@ class MetricsSpec extends SparkSpec {
     // exact path untouched under the gate
     assert(Metrics.prCurve(cont, "y", "score").count() == raw.map(_._2).distinct.length)
 
-    // thresholdScan guard: quantized counts at every grid threshold
+    // thresholdScan needs no guard: its bucket histogram is bounded by the
+    // threshold count, so the counts stay EXACT over the raw scores
     val ths = (1 to 19).map(_ / 20.0)
-    val got = Metrics.thresholdScan(cont, "y", "score", ths,
-      maxDistinctScores = 100, quantizeBins = 64)
+    val got = Metrics.thresholdScan(cont, "y", "score", ths)
       .collect().map(r => r.getDouble(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(got.keySet == ths.toSet)
     ths.foreach { t =>
-      val tp = quant.count(r => r._1 == 1 && r._2 >= t).toLong
-      val fp = quant.count(r => r._1 == 0 && r._2 >= t).toLong
-      val fn = quant.count(r => r._1 == 1 && r._2 < t).toLong
+      val tp = raw.count(r => r._1 == 1 && r._2 >= t).toLong
+      val fp = raw.count(r => r._1 == 0 && r._2 >= t).toLong
+      val fn = raw.count(r => r._1 == 1 && r._2 < t).toLong
       assert(got(t) == ((tp, fp, fn)), s"t=$t")
     }
+  }
+
+  test("thresholdScan counts a repeated threshold once") {
+    val df = Seq((1, 0.9), (0, 0.7), (1, 0.4), (0, 0.2)).toDF("y", "score")
+    def scan(ths: Seq[Double]) = Metrics.thresholdScan(df, "y", "score", ths).collect().toSeq
+    assert(scan(Seq(0.5)) == Seq(org.apache.spark.sql.Row(0.5, 1L, 1L, 1L, 0.5)))
+    assert(scan(Seq(0.5, 0.5)) == scan(Seq(0.5)))
+  }
+
+  test("thresholdScan matches Spark's >= on null, NaN, -0.0 and 0.0 scores and null labels") {
+    val df = Seq[(Option[Int], Option[Double])](
+      (Some(1), Some(0.0)), (Some(0), Some(-0.0)), (Some(1), Some(-0.0)), (None, Some(0.0)),
+      (Some(1), Some(Double.NaN)), (Some(0), Some(Double.NaN)), (None, Some(Double.NaN)),
+      (Some(1), None), (Some(0), None), (None, None),
+      (Some(1), Some(0.7)), (None, Some(0.5)), (Some(0), Some(-1.0)),
+      (Some(1), Some(Double.PositiveInfinity)), (Some(0), Some(Double.NegativeInfinity))
+    ).toDF("y", "score")
+    val ths = Seq(0.5, -0.0, 0.0, Double.NaN, -1.0, Double.NegativeInfinity, 0.7,
+      Double.PositiveInfinity, 0.5, Double.NaN)
+    val bits = java.lang.Double.doubleToLongBits _
+    val got = Metrics.thresholdScan(df, "y", "score", ths).collect()
+      .map(r => bits(r.getDouble(0)) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    // reference: Spark's own grouping of the thresholds and its own >= filter
+    // per threshold; a null label is not a positive, so it counts into fp
+    val distinct = ths.toDF("t").distinct().as[Double].collect()
+    assert(got.size == distinct.length && distinct.length == 7)
+    distinct.foreach { t =>
+      val above = df.filter(col("score") >= lit(t))
+      val tp = above.filter(col("y") === 1).count()
+      val fp = above.count() - tp
+      val fn = df.filter(col("score") < lit(t) && col("y") === 1).count()
+      assert(got(bits(t)) == ((tp, fp, fn)), s"t=$t")
+    }
+  }
+
+  test("thresholdScan is lazy: building runs no job, collecting caches nothing") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    // numCachedEntries is private[sql] in Scala but public in bytecode
+    def cachedEntries = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    val input = scored
+    val cachedBefore = cachedEntries
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val built =
+      try {
+        val df = Metrics.thresholdScan(input, "y", "score", (1 to 99).map(_ / 100.0))
+        // the bus delivers events in order: once the marker job's start
+        // arrives, every job started while building has been counted
+        sc.setLocalProperty("graft.spec.marker", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+        df
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"building ran ${jobs.get} job(s)")
+    assert(built.collect().length == 99)
+    assert(cachedEntries == cachedBefore, "cache manager entry left behind")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "persistent RDD left behind")
   }
 
   test("approx-quantile scale path stays within tolerance of the exact path") {

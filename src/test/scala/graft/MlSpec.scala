@@ -392,11 +392,5 @@ class MlSpec extends SparkSpec {
       Seq(Skew.sumL("v"), Skew.sumL("one")))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(s2 == direct)
-    val sm = Skew.saltedMean(skewed, Seq("k"), "ts", 8, "v", "m")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dm = skewed.groupBy("k")
-      .agg((sum(col("v").cast("long")).cast("double") / count(lit(1)).cast("double")).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(sm == dm)
   }
 }

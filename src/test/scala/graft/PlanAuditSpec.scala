@@ -151,13 +151,13 @@ class PlanAuditSpec extends SparkSpec {
       "q_ann_lsh_batch" -> ("same CosTopK bounded-heap aggregate (the bucket " +
         "projection is now the native codegen'd LshBucket)")
     )
-    // The audit must see THROUGH InMemoryRelation: operators that persist an
-    // intermediate during construction (thresholdScan's eager histogram) get
-    // their upstream plan swapped for a cached scan by the CacheManager, and
-    // whether that swap happens depends on what ran before (the entry for
-    // q_threshold_scan flip-flopped needed/stale with test order). Walking
-    // the cachedPlan makes the sweep deterministic and audits the plan that
-    // actually produced the cached data.
+    // The audit must see THROUGH InMemoryRelation: an operator that persists
+    // an intermediate during construction (only `ivfLists` does) gets its
+    // upstream plan swapped for a cached scan by the CacheManager, and
+    // whether that swap happens depends on what ran before, so an allowlist
+    // entry would flip needed/stale with test order. Walking the cachedPlan
+    // makes the sweep deterministic and audits the plan that actually
+    // produced the cached data.
     def fallbacks(df: DataFrame): Seq[String] = {
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -195,5 +195,54 @@ class PlanAuditSpec extends SparkSpec {
     // allowlist hygiene: drop entries that no longer fall back
     val stale = allow.keySet -- offending.keySet
     assert(stale.isEmpty, s"allowlist entries no longer needed: $stale")
+  }
+
+  test("every top-level main object is named in main code outside its own declaration, or is an entry point") {
+    // A module that no query, pipeline or main reaches is dead code. Scan
+    // the main sources (comment lines skipped) for each top-level object's
+    // name outside its own body, to a fixpoint: an object named only from
+    // dead objects is dead too. Entry points are objects with a `main`, and
+    // GraftExtensions, which Spark loads by class name.
+    import scala.jdk.CollectionConverters._
+    type Decl = (String, String, Int, Int) // name, file, first and last line
+    def unreferenced(srcs: Map[String, IndexedSeq[String]]): Set[String] = {
+      def code(l: String) = { val t = l.trim; !Seq("//", "*", "/*").exists(t.startsWith) }
+      val Obj = "object (\\w+)\\b.*".r
+      val decls: Seq[Decl] = for {
+        (f, ls) <- srcs.toSeq
+        (Obj(name), i) <- ls.zipWithIndex
+        end = ls.indexWhere(_.startsWith("}"), i + 1)
+      } yield (name, f, i, if (end < 0) i else end)
+      def isEntry(d: Decl) = d._1 == "GraftExtensions" ||
+        srcs(d._2).slice(d._3, d._4 + 1).exists(_.contains("def main("))
+      var dead = Set.empty[Decl]
+      var grew = true
+      while (grew) {
+        val found = decls.filterNot(d => dead(d) || isEntry(d)).filter { d =>
+          val word = s"\\b${d._1}\\b".r
+          val skip = dead + d
+          !srcs.exists { case (f, ls) =>
+            ls.indices.exists(k => code(ls(k)) && word.findFirstIn(ls(k)).isDefined &&
+              !skip.exists(o => o._2 == f && o._3 <= k && k <= o._4))
+          }
+        }
+        grew = found.nonEmpty
+        dead ++= found
+      }
+      dead.map(_._1)
+    }
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: no $root")
+    val main = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq).toMap
+    // self-check: an unreferenced object, and one named only by it
+    val synthetic = Map("Synthetic.scala" -> IndexedSeq(
+      "object SelfCheckOrphan {", "  val x = SelfCheckOrphanDep.y", "}",
+      "object SelfCheckOrphanDep {", "  val y = 1", "}"))
+    assert(unreferenced(main ++ synthetic) -- unreferenced(main) ==
+      Set("SelfCheckOrphan", "SelfCheckOrphanDep"), "detector failed its self-check")
+    val dead = unreferenced(main)
+    assert(dead.isEmpty, s"main objects with no caller: ${dead.toSeq.sorted.mkString(", ")}")
   }
 }

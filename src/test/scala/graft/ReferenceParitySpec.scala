@@ -6,8 +6,7 @@ import graft.ops._
 
 /** Regression against the reference's *exact* scalar semantics on its own
   * data shapes (FIXTURES.md F2): raw-log schema, epoch parse heuristic,
-  * Asia/Shanghai hour floor, both period taxonomies, banker's rounding,
-  * null audit, non-finite cleanup. */
+  * Asia/Shanghai hour floor, both period taxonomies, banker's rounding. */
 class ReferenceParitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -67,20 +66,6 @@ class ReferenceParitySpec extends SparkSpec {
     assert(key(rounded) == key(expect))
     // and the rounded domain actually differs somewhere (the flag does work)
     assert(key(rounded) != key(plain))
-  }
-
-  test("null audit: passes on clean data, names the offending columns") {
-    val clean = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    assert(DataOps.nullAudit(clean, Seq("id", "s")).count() == 2)
-    val dirty = Seq((1L, "a"), (2L, null)).toDF("id", "s")
-    val e = intercept[DataOps.NullAuditException] { DataOps.nullAudit(dirty, Seq("id", "s")) }
-    assert(e.cols == Seq("s"))
-  }
-
-  test("non-finite cleanup zeroes NaN and ±Inf only") {
-    val df = Seq(1.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -2.0).toDF("x")
-    val got = DataOps.cleanNonFinite(df, Seq("x")).collect().map(_.getDouble(0)).toSeq
-    assert(got == Seq(1.5, 0.0, 0.0, 0.0, -2.0))
   }
 
   test("reference raw-log pipeline on the reference schema (T0→T1 shape)") {
