@@ -21,7 +21,7 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   /** Return the session to zero retained storage: drop operator-scoped
-    * persists (Curation/connectedComponents label RDDs), the SQL cache, and
+    * persists (IVF lists, `mergedScalable`'s sorted union), the SQL cache, and
     * any stray RDD persists. Round 4's driver bench showed why this matters:
     * caches pinned by earlier queries in the 60×2-rep shared JVM slowed two
     * UNRELATED mid-pack queries ~3× and depressed the TPS loop — every rep

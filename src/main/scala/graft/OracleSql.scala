@@ -509,7 +509,8 @@ object OracleSql {
   /** Dedup cluster assignment: min id per connected component over the
     * Jaccard-verified LSH candidate edges — the recursive label closure
     * computes every (node, reachable-id) pair, so MIN(lab) per node equals
-    * the fixpoint of Dedup.connectedComponents' min-label propagation. */
+    * the component's min id, the root Dedup.connectedComponents' union-find
+    * keeps. */
   val qDedupClusters: String =
     s"""WITH RECURSIVE $lshPairsCte,
        |g AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS gr FROM documents),

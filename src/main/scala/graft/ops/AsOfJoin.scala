@@ -120,7 +120,7 @@ object AsOfJoin {
     val r = dedupRight(right, key, ts, rightSeq, payload)
     val lTagged = left.select(
       col(key).as("__k"), micros(col(ts)).as("__t"), lit(1).as("__side"),
-      struct(left.columns.map(col): _*).as("__l"),
+      struct(left.columns.map(col).toIndexedSeq: _*).as("__l"),
       lit(null).cast(StructType(payload.map(p =>
         StructField(p, r.schema(p).dataType, nullable = true)))).as("__p"))
     val lStructType = lTagged.schema("__l").dataType.asInstanceOf[StructType]
@@ -147,7 +147,7 @@ object AsOfJoin {
       .select(col("__side"), col("__l"),
         last(col("__p"), ignoreNulls = true).over(w).as("__p"))
       .filter(col("__side") === 1)
-      .select(left.columns.map(c => col(s"__l.$c")) ++
+      .select(left.columns.map(c => col(s"__l.$c")).toIndexedSeq ++
         payload.map(pc => col(s"__p.$pc").as(s"$prefix$pc")): _*)
   }
 
@@ -309,7 +309,7 @@ object AsOfJoin {
     // binary-search the broadcast index per row — map-only, no shuffle, and
     // no external-Row boxing on the 100 TB side
     val tagged = left.select(
-      struct(left.columns.map(col): _*).as("__l"),
+      struct(left.columns.map(col).toIndexedSeq: _*).as("__l"),
       col(key).as("__kp"), micros(col(ts)).as("__tp"))
     val nullPay = nullPayload(pStructType)
     val rdd = tagged.queryExecution.toRdd.mapPartitions { it =>

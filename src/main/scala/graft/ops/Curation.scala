@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Terminal corpus-curation deliverable — the composed query a
@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * Stage order is the scale order: the cheap map-only quality gate
   * ([[TextAnalysis.qualityFiltered]] — one codegen'd pass over `text`) runs
   * BEFORE the expensive LSH+Jaccard+connected-components dedup, so the
-  * banded join only ever sees documents worth keeping. Shard assignment is
-  * a pure projection — `pmod(pmod(id, 2654435761) · 40503, nShards)`: the
-  * inner mod bounds the product at ~2^48, so the arithmetic can NEVER
+  * banded join only ever sees documents worth keeping. The whole query is
+  * one lazy plan: nothing runs at construction and nothing is cached (the
+  * gate is a map-only pass, recomputed by each of its readers).
+  *
+  * Shard assignment is a pure projection — `pmod(pmod(id, 2654435761) ·
+  * 40503, nShards)`: the inner mod bounds the product at ~2^48, so it can NEVER
   * overflow int64 in either engine (a bare `id · 2654435761` would wrap in
   * Spark but raise in DuckDB for ids ≥ 2^63/2654435761 ≈ 3.5e9 — reachable
   * corpus ids), keeping the oracle mirror exact at any id. The output can
@@ -31,23 +34,10 @@ object Curation {
              bands: Int = 4, maxBucket: Int = Dedup.DefaultMaxBucket,
              jaccardThreshold: Double = 0.6): DataFrame = {
     require(nShards > 0, "nShards must be positive")
-    // persist: the gate's scoring pass is consumed ~5× downstream (LSH
-    // banding, both Jaccard joins, the CC node seed), ALL of them
-    // materialized eagerly inside Dedup.clusters (connectedComponents runs
-    // its BSP jobs at construction) — so the cache is hot exactly while it
-    // is needed, and can be RELEASED before this method returns. The one
-    // remaining consumer, the returned plan's survivor join, recomputes the
-    // gate from source: a single map-only codegen'd pass over `text`, the
-    // cheapest stage in the pipeline — a deliberate trade for zero retained
-    // storage per call (round-4's leak measurably slowed unrelated queries
-    // in a 60×2-rep shared session). On failure inside clusters the finally
-    // still drops the cache before the exception escapes.
     val clean = TextAnalysis.qualityFiltered(
-      df.select(col(idCol), col(textCol)), textCol, minScore).persist()
-    val clusters =
-      try Dedup.clusters(clean, idCol, textCol,
-        shingleK, numHashes, bands, maxBucket, jaccardThreshold)
-      finally clean.unpersist(blocking = false)
+      df.select(col(idCol), col(textCol)), textCol, minScore)
+    val clusters = Dedup.clusters(clean, idCol, textCol,
+      shingleK, numHashes, bands, maxBucket, jaccardThreshold)
     val sizes = clusters.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_dups"))
     clean.join(clusters, idCol)
       .filter(col(idCol) === col("cluster_id"))

@@ -106,141 +106,50 @@ object Dedup {
   def withSimHash(df: DataFrame, textCol: String = "text", out: String = "simhash"): DataFrame =
     df.withColumn(out, simHash(col(textCol)))
 
-  /** Connected components by min-label propagation (BSP rounds, the
-    * GraphX/GraphFrames CC algorithm shape): every node starts labeled with
-    * its own id; each round, a node adopts the min of its label and its
-    * neighbors' labels; converged when a round changes nothing. Rounds =
-    * graph diameter — dedup graphs are near-stars (exact groups attach to a
-    * representative), so 2-3 rounds in practice.
+  /** Connected components as one lazy union-find: (idCol, cluster_id) for
+    * EVERY node, cluster_id = min id in its component (a row is its
+    * cluster's survivor iff id == cluster_id). Building runs no job and
+    * nothing is cached.
     *
-    * Scale shape: each round is one keyed join + one map-side-combined
-    * groupBy, materialized by ONE job — the changed-row count rides that
-    * materialization on a LongAccumulator instead of a second scan (the
-    * round-3 shape ran localCheckpoint + a `count()` per round). A task
-    * retry can only over-count the accumulator (transformation-stage
-    * semantics), which at worst runs one extra no-op round — convergence is
-    * still proven by the final `changed == 0` require. Superseded rounds are
-    * unpersisted as soon as the next round lands (executor storage stays
-    * O(1) in the round count); the FINAL label RDD stays persisted because
-    * the returned DataFrame reads it — it is registered with `scope`
-    * (default [[StorageScope.global]]) so the session owner releases it
-    * deterministically once the result is consumed (Bench does this between
-    * reps). On ANY failure — non-convergence or a job error — every RDD this
-    * operator persisted is unpersisted before the exception escapes.
+    * The edges (cast to long, null endpoints dropped) fold per partition
+    * into a forest of (node, root) pairs, node != root; a `repartition(1)`
+    * shuffle gathers the forests for the same fold once more; the nodes
+    * left-join the roots, so a node no edge touches is its own cluster. The
+    * fold is a `LongMap` union-find with path compression where the smaller
+    * root wins: every root is its component's min id whatever the edge
+    * order, so the output is identical under task retry.
     *
-    * `reliable = true` swaps the MEMORY_AND_DISK persist for a real RDD
-    * checkpoint (requires `sparkContext.setCheckpointDir`) — the
-    * executor-loss-safe cluster path; default stays local-fast.
-    * Deterministic: min is order-independent. Fails fast (require) if
-    * `maxIter` rounds don't converge rather than returning partial labels.
-    *
-    * Rounds: one-hop min propagation needs DIAMETER rounds — right for the
-    * near-star graphs dedup produces (2-3), wrong for adversarial chains.
-    * `shortcut = true` adds pointer doubling (`lab ← lab[lab[x]]`, one extra
-    * keyed self-join per round), which converges in O(log diameter) rounds:
-    * labels only decrease and every label is a same-component node id, so
-    * the shortcut preserves the invariant and no-ops exactly at the
-    * fixpoint. Default OFF: the extra join costs more than it saves on
-    * star-like dedup graphs; turn it on for general graph clustering.
-    *
-    * Returns (idCol, cluster_id) for EVERY node; cluster_id = min id in the
-    * component, so a row is its cluster's survivor iff id == cluster_id. */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, idCol: String,
-                          maxIter: Int = 20, reliable: Boolean = false,
-                          shortcut: Boolean = false,
-                          scope: StorageScope = StorageScope.global): DataFrame = {
-    val spark = nodes.sparkSession
-    val sc = spark.sparkContext
-    if (reliable) require(sc.getCheckpointDir.isDefined,
-      "reliable=true needs sparkContext.setCheckpointDir")
-    // materialize a plan into a leaf RDD-backed DataFrame (cuts lineage like
-    // localCheckpoint, but hands back the RDD so superseded rounds can be
-    // unpersisted exactly); optionally counts rows with __chg=true during
-    // the same pass via an accumulator
-    def materialize(df: DataFrame, chgIdx: Int)
-        : (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow], Long, DataFrame) = {
-      val acc = sc.longAccumulator("cc_changed")
-      val base = df.queryExecution.toRdd.mapPartitions { it =>
-        it.map { r =>
-          if (chgIdx >= 0 && r.getBoolean(chgIdx)) acc.add(1L)
-          r.copy()
-        }
-      }
-      val rdd = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (reliable) rdd.checkpoint()
-      // the round's ONE job: persist + checkpoint + change count. If it
-      // fails partway, some tasks may already have cached their partitions —
-      // drop them before rethrowing so a failed round leaks nothing (the
-      // caller's finally only knows about COMPLETED rounds' RDDs)
-      try rdd.count()
-      catch { case t: Throwable => rdd.unpersist(blocking = false); throw t }
-      (rdd, acc.value,
-        org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, df.schema))
+    * Edge contract: endpoints are node ids, as every caller produces them;
+    * an edge to a non-node still joins its two sides through that id.
+    * Scale: the one global task holds at most one `LongMap` entry per
+    * edge-touched node (the forests' non-root nodes). */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame, idCol: String): DataFrame = {
+    import nodes.sparkSession.implicits._
+    val roots = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .na.drop().as[(Long, Long)]
+      .mapPartitions(forest).repartition(1).mapPartitions(forest)
+      .toDF("__node", "__root")
+    nodes.select(col(idCol).cast("long").as(idCol))
+      .join(roots, col(idCol) === col("__node"), "left")
+      .select(col(idCol), coalesce(col("__root"), col(idCol)).as("cluster_id"))
+  }
+
+  /** Union-find fold of an edge stream: (node, root) for every non-root
+    * node it touches, root = the min id of the node's component. */
+  private def forest(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long] // non-roots only
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
     }
-    // materialize the symmetric edge list ONCE — it is re-joined every
-    // round, and recomputing a lazy upstream (e.g. the whole LSH + Jaccard
-    // candidate pipeline) per round would multiply the dominant cost by the
-    // round count. Symmetrization is a map-only explode of each edge into
-    // both directions — the round-5 self-UNION planned the (expensive)
-    // upstream subtree twice and only partially deduped it via exchange
-    // reuse; the explode evaluates it exactly once.
-    val (symRdd, _, sym) = materialize(
-      edges.select(explode(array(
-          struct(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")),
-          struct(col("id_b").cast("long").as("a"), col("id_a").cast("long").as("b"))))
-          .as("__e"))
-        .select(col("__e.a").as("a"), col("__e.b").as("b")),
-      chgIdx = -1)
-    var labRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = null
-    var labels: DataFrame = null
-    var ok = false
-    try {
-    val m0 = materialize(
-      nodes.select(col(idCol).cast("long").as("__node")).withColumn("__lab", col("__node")),
-      chgIdx = -1)
-    labRdd = m0._1
-    labels = m0._3
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val neigh = sym.join(labels, col("a") === col("__node"))
-        .groupBy(col("b")).agg(min(col("__lab")).as("__nlab"))
-      val onehop = labels.join(neigh, labels("__node") === neigh("b"), "left")
-        .select(col("__node").as("__n1"),
-          least(col("__lab"), coalesce(col("__nlab"), col("__lab"))).as("__l1"),
-          col("__lab").as("__l0"))
-      val stepped =
-        if (!shortcut)
-          onehop.select(col("__n1").as("__node"), col("__l1").as("__lab"),
-            (col("__l1") < col("__l0")).as("__chg"))
-        else {
-          // pointer doubling: re-read the label OF my new label from the
-          // same one-hop table (lab[x] is always a node id, so the inner
-          // lookup hits; left join + coalesce only guards the self row)
-          val byNode = onehop.select(col("__n1").as("__n2"), col("__l1").as("__l2"))
-          onehop.join(byNode, col("__l1") === col("__n2"), "left")
-            .select(col("__n1").as("__node"),
-              least(col("__l1"), coalesce(col("__l2"), col("__l1"))).as("__lab"),
-              (least(col("__l1"), coalesce(col("__l2"), col("__l1"))) < col("__l0")).as("__chg"))
-        }
-      val (rdd, chg, df) = materialize(stepped, chgIdx = 2)
-      changed = chg
-      labRdd.unpersist(blocking = false) // superseded round: free its blocks now
-      labRdd = rdd
-      labels = df.select("__node", "__lab")
-      i += 1
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    ok = true
-    } finally {
-      // edges are never read by the result; the FINAL label RDD survives
-      // only on success (registered with the caller's scope below) — on any
-      // failure nothing this operator persisted outlives the exception
-      symRdd.unpersist(blocking = false)
-      if (!ok && labRdd != null) labRdd.unpersist(blocking = false)
-    }
-    scope.retain(labRdd)
-    labels.select(col("__node").as(idCol), col("__lab").as("cluster_id"))
+    parent.keys.toArray.iterator.map(x => (x, find(x)))
   }
 
   /** The terminal dedup deliverable: cluster id per document. Edges =
@@ -252,13 +161,12 @@ object Dedup {
   def clusters(df: DataFrame, idCol: String, textCol: String,
                shingleK: Int = 3, numHashes: Int = 12, bands: Int = 4,
                maxBucket: Int = DefaultMaxBucket,
-               jaccardThreshold: Double = 0.6, maxIter: Int = 20,
-               scope: StorageScope = StorageScope.global): DataFrame = {
+               jaccardThreshold: Double = 0.6): DataFrame = {
     val pairs = minHashLshPairs(df, idCol, textCol, shingleK, numHashes, bands, maxBucket)
     val verified = ngramJaccard(df, pairs, idCol, textCol)
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id_a"), col("id_b"))
-    connectedComponents(df.select(col(idCol)), verified, idCol, maxIter, scope = scope)
+    connectedComponents(df.select(col(idCol)), verified, idCol)
   }
 
   /** Exact token-set Jaccard for candidate pairs (precision verification).

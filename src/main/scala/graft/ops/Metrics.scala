@@ -92,8 +92,9 @@ object Metrics {
     * (−0.0 = 0.0, NaN = NaN). Each row's bucket `b` = |{t : score >= t}|
     * under Spark's `>=` ([[ThresholdBucket]]; NaN is above every number); the
     * ≤ |thresholds|+2-row histogram over `b` crosses the broadcast thresholds
-    * (index `i`): tp = Σp and fp = Σ(n − p) over b > i, fn = Σp over b ≤ i.
-    * A null score is counted nowhere; a null label counts as a negative. */
+    * (index `i`): tp = Σp and fp = Σq over b > i, fn = Σp over b ≤ i, with
+    * p / q the label = 1 / label = 0 counts. A null score is counted nowhere,
+    * and so is a label other than 0 and 1 (null included), as in the oracle. */
   def thresholdScan(df: DataFrame, label: String, score: String,
                     thresholds: Seq[Double]): DataFrame = {
     val spark = df.sparkSession
@@ -104,12 +105,14 @@ object Metrics {
     val above = col("__b") > col("__i")
     val Seq(tp, fp, fn) = Seq("tp", "fp", "fn").map(c => col(c).cast("double"))
     val den = lit(2.0) * tp + fp + fn
-    histogram(df, label, ThresholdBucket.threshold_bucket(col(score).cast("double"), ts).as("__b"))
+    df.groupBy(ThresholdBucket.threshold_bucket(col(score).cast("double"), ts).as("__b"))
+      .agg(sum(when(col(label) === 1, 1L).otherwise(0L)).as("__p"),
+        sum(when(col(label) === 0, 1L).otherwise(0L)).as("__q"))
       .crossJoin(broadcast(th))
       .groupBy(col("threshold"))
       .agg(
         sum(when(above, col("__p")).otherwise(0L)).as("tp"),
-        sum(when(above, col("__n") - col("__p")).otherwise(0L)).as("fp"),
+        sum(when(above, col("__q")).otherwise(0L)).as("fp"),
         sum(when(col("__b") <= col("__i"), col("__p")).otherwise(0L)).as("fn"))
       .select(col("threshold"), col("tp"), col("fp"), col("fn"),
         when(den > 0.0, (lit(2.0) * tp) / den).as("f1"))

@@ -4,11 +4,12 @@ import scala.util.control.NonFatal
 
 /** Deterministic release of persists that must OUTLIVE their operator.
   *
-  * Iterative operators ([[Dedup.connectedComponents]]) return plans that
-  * read a persisted RDD — unpersisting before return would force the whole
-  * BSP cascade to recompute on first consumption, but never unpersisting
+  * Some operators return plans that read a persist made at construction
+  * (the IVF inverted lists in [[Similarity]], the sorted union in
+  * [[AsOfJoin.mergedScalable]]) — unpersisting before return would force
+  * that work to recompute on first consumption, but never unpersisting
   * leaks executor storage in long-lived sessions (the round-4 driver bench
-  * measurably slowed two unrelated queries ~3× after the curation/CC caches
+  * measurably slowed two unrelated queries ~3× after such caches
   * accumulated across 60×2 reps). This scope is the middle path: operators
   * register the handles they intentionally leave persisted; the session
   * owner (Bench between reps, a spec's afterAll, a production job between

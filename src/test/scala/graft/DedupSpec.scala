@@ -261,41 +261,16 @@ class DedupSpec extends SparkSpec {
     assert(got.filter { case (id, c) => id == c }.keySet == Set(100L, 200L, 300L))
   }
 
-  test("connectedComponents: O(1) pinned storage, reliable checkpoint path, null-text LSH") {
-    // a chain forces ~n BSP rounds (one-hop min-label propagation) —
-    // superseded rounds must be unpersisted as they are replaced (round-3
-    // advice: storage grew linearly with round count)
+  test("connectedComponents persists nothing; null-text docs never pair and stay singletons") {
     val n = 12
     val nodesDf = (0L until n.toLong).toDF("doc_id")
     val edgesDf = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val got = Dedup.connectedComponents(nodesDf, edgesDf, "doc_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.values.toSet == Set(0L), "chain must collapse to one component")
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leftover.size <= 1, s"pinned ${leftover.size} RDDs (want <= final labels only)")
-    // the surviving labels RDD is registered with the global scope — one
-    // release() returns the session to zero retained storage (what Bench
-    // does between reps)
-    graft.ops.StorageScope.global.release()
-    val afterRelease = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(afterRelease.isEmpty, s"release() left ${afterRelease.size} RDDs pinned")
-    // failure path (non-convergence): NOTHING this operator persisted may
-    // outlive the exception (round-4 advice: symRdd + last labRdd leaked)
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", maxIter = 2)
-    }
-    val afterFailure = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(afterFailure.isEmpty, s"failed run left ${afterFailure.size} RDDs pinned")
-    // reliable=true: real RDD checkpoint; requires a checkpoint dir
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", reliable = true)
-    }
-    val ckptDir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
-    val rel = Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", reliable = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rel == got)
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leftover.isEmpty, s"pinned ${leftover.size} RDDs")
     // null texts: no star pairs among no-text documents (round-3 advice) —
     // and clusters() still assigns them singleton components
     val withNulls = Seq((1L, "same text here"), (2L, "same text here"),
@@ -322,18 +297,14 @@ class DedupSpec extends SparkSpec {
       (14L, "el gato y el perro de la casa que ladra mucho y"),
       (20L, "the quick brown fox jumps over a lazy sleeping dog today")
     ).toDF("doc_id", "text")
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val got = graft.ops.Curation.curate(docs, "doc_id", "text", nShards = 8,
       shingleK = 1, numHashes = 12, bands = 6)
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getLong(3), r.getInt(4)))
       .toMap
-    // cache lifecycle (round-4 what's-wrong #1): the gate persist is released
-    // inside curate; only the scope-registered CC labels RDD may remain, and
-    // one global release drops it
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
-    assert(pinned.size <= 1, s"curate pinned ${pinned.size} RDDs (want <= CC labels only)")
-    graft.ops.StorageScope.global.release()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).isEmpty)
+    // cache lifecycle: curate is one lazy plan, so consuming it pins nothing
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet -- pinnedBefore
+    assert(pinned.isEmpty, s"curate pinned ${pinned.size} RDDs")
     // survivors: 10 (component {10,11,12}) and 20 (singleton); 13/14 gated out
     assert(got.keySet == Set(10L, 20L), s"wrong survivors: $got")
     assert(got(10L)._3 == 3L, s"component size wrong: ${got(10L)}")
@@ -349,18 +320,41 @@ class DedupSpec extends SparkSpec {
     assert(got(10L)._1 >= 2 && got(10L)._2 == 10)
   }
 
-  test("connectedComponents shortcut: O(log d) rounds on a chain, same fixpoint") {
-    // a 64-node chain has diameter 63: one-hop propagation cannot finish in
-    // 10 rounds, pointer doubling must (ceil(log2) + margin)
-    val n = 64
-    val nodesDf = (0L until n.toLong).toDF("doc_id")
-    val edgesDf = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", maxIter = 10)
+  test("connectedComponents: jobs do not grow with chain length; building runs no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // jobs started while `f` runs; the bus delivers events in order, so once
+    // the marker job's start arrives every earlier job has been counted
+    def jobsDuring[A](f: => A): (A, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+            markerSeen.countDown()
+          else jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val a = f
+        sc.setLocalProperty("graft.spec.marker", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+        (a, jobs.get)
+      } finally sc.removeSparkListener(listener)
     }
-    val got = Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", maxIter = 10,
-      shortcut = true).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == n && got.values.toSet == Set(0L))
+    // a path of n nodes has diameter n - 1: round-based label propagation
+    // would run a job per hop
+    val counts = Seq(4, 64).map { n =>
+      val nodesDf = (0L until n.toLong).toDF("doc_id")
+      val edgesDf = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val (cc, built) = jobsDuring(Dedup.connectedComponents(nodesDf, edgesDf, "doc_id"))
+      assert(built == 0, s"building ran $built job(s) at n=$n")
+      val (labels, ran) = jobsDuring(cc.collect().map(r => r.getLong(0) -> r.getLong(1)))
+      assert(labels.length == n && labels.forall(_._2 == 0L), s"n=$n: ${labels.toSeq}")
+      ran
+    }
+    assert(counts(0) == counts(1), s"jobs grew with the path: 4 nodes ${counts(0)}, 64 nodes ${counts(1)}")
   }
 
   test("native expressions reject wrong input types at analysis time") {

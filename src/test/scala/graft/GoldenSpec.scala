@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.features.BehaviorBinding
 
 /** Golden-fixture regression (SURVEY §5 mechanism 1): the engine's PIT anchor

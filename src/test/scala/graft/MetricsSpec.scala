@@ -185,13 +185,14 @@ class MetricsSpec extends SparkSpec {
     val got = Metrics.thresholdScan(df, "y", "score", ths).collect()
       .map(r => bits(r.getDouble(0)) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     // reference: Spark's own grouping of the thresholds and its own >= filter
-    // per threshold; a null label is not a positive, so it counts into fp
+    // per threshold; a null label is neither positive nor negative, so it
+    // counts nowhere (fp counts y = 0 only, as the DuckDB oracle does)
     val distinct = ths.toDF("t").distinct().as[Double].collect()
     assert(got.size == distinct.length && distinct.length == 7)
     distinct.foreach { t =>
       val above = df.filter(col("score") >= lit(t))
       val tp = above.filter(col("y") === 1).count()
-      val fp = above.count() - tp
+      val fp = above.filter(col("y") === 0).count()
       val fn = df.filter(col("score") < lit(t) && col("y") === 1).count()
       assert(got(bits(t)) == ((tp, fp, fn)), s"t=$t")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.gen.TranscriptGen
 import graft.features.BehaviorBinding
 import graft.oracle.ScalaOracle

@@ -137,6 +137,8 @@ class PlanAuditSpec extends SparkSpec {
     val allow: Map[String, String] = Map(
       "q_lsh_pairs" -> "banding transform over the 12-element signature of DISTINCT texts",
       "q_jaccard_verify" -> "same banding + set ops over LSH candidate pairs only",
+      "q_dedup_clusters" -> "same banding, read by the lazy union-find's edge fold",
+      "q_corpus_curation" -> "same banding, read by the lazy union-find's edge fold",
       "q_slot_clean" -> pct, "q_entity_stats" -> pct, "q_entity" -> pct,
       "q_entity_features" -> pct, "q_interactions" -> pct, "q_stratified_folds" -> pct,
       "q_top_entities" -> pct, "q_variance_screen" -> pct, "q_iqr_clip" -> pct,

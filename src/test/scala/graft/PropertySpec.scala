@@ -5,7 +5,6 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
 import graft.ops._
-import graft.oracle.ScalaOracle
 
 /** scalacheck property suite (FIXTURES.md F3): random transcript tables with
   * adversarial shapes — empty conversations, single turns, duplicate
@@ -143,19 +142,20 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: connectedComponents equals union-find on arbitrary graphs") {
-    // random graphs incl. isolated nodes, self-referential shapes, chains,
-    // multi-edges — the distributed min-label fixpoint must equal the exact
-    // sequential union-find answer every time
+    // random graphs incl. isolated nodes, self-loops, chains, duplicate and
+    // reversed edges, spread over several partitions — the per-partition
+    // forests + global fold must equal the sequential union-find every time
     val genGraph: Gen[(Seq[Long], Seq[(Long, Long)])] = for {
       n <- Gen.choose(1, 30)
       m <- Gen.choose(0, 40)
       edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n - 1L); b <- Gen.choose(0L, n - 1L) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield ((0L until n.toLong), edges)
+        a <- Gen.choose(0L, n - 1L); b <- Gen.choose(0L, n - 1L)
+      } yield (a, b))
+      d <- Gen.choose(0, m)
+    } yield ((0L until n.toLong), edges ++ edges.take(d) ++ edges.takeRight(d).map(_.swap))
+    def find(p: scala.collection.mutable.Map[Long, Long], x: Long): Long =
+      if (p(x) == x) x else { val r = find(p, p(x)); p(x) = r; r }
     cases(genGraph, n = 10).foreach { case (nodes, edges) =>
-      def find(p: scala.collection.mutable.Map[Long, Long], x: Long): Long =
-        if (p(x) == x) x else { val r = find(p, p(x)); p(x) = r; r }
       val parent = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
       edges.foreach { case (a, b) =>
         val (ra, rb) = (find(parent, a), find(parent, b))
@@ -165,14 +165,16 @@ class PropertySpec extends SparkSpec {
       val nodesDf = nodes.toDF("doc_id")
       val edgesDf =
         if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-        else edges.toDF("id_a", "id_b")
+        else edges.toDF("id_a", "id_b").repartition(3)
       val got = Dedup.connectedComponents(nodesDf, edgesDf, "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"edges=$edges")
-      // the pointer-doubling variant reaches the same fixpoint
-      val gotSc = Dedup.connectedComponents(nodesDf, edgesDf, "doc_id", shortcut = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotSc == expected, s"shortcut mismatch: edges=$edges")
     }
+    // an edge with a null endpoint joins nothing
+    val withNulls = Seq[(Option[Long], Option[Long])]((Some(0L), Some(1L)), (None, Some(2L)),
+      (Some(3L), None), (Some(4L), Some(3L)), (None, None)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents((0L to 4L).toDF("doc_id"), withNulls, "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 3L), s"null endpoints: $got")
   }
 }

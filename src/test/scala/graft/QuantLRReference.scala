@@ -38,7 +38,6 @@ object QuantLRReference {
     //     with a plain persist, analysis/optimization re-walked the whole
     //     upstream logical plan on every iteration (~100 ms of driver time
     //     per action measured — more than the iteration's actual job).
-    // Same materialize-to-leaf pattern as Dedup.connectedComponents.
     val spark = df.sparkSession
     val proj = df.select(features.map(f => col(f).cast("long").as(f)) :+
       col(labelCol).cast("double").as("__y"): _*)
