@@ -122,7 +122,7 @@ object Bench {
     // min-of-2 reps per query: single-shot times in a shared JVM carry
     // GC-debt outliers (round 3's driver run read q_pr_curve at 7.1 s where
     // 3 fresh-JVM runs read 1.1-1.4 s). Two full reps (construction included
-    // — PrefixSum-based queries build eagerly) bound that noise while keeping
+    // — some queries run jobs while they are built) bound that noise while keeping
     // the pass ~2x, and pass-1 totals are reported alongside so the variance
     // is visible, not hidden.
     //

@@ -629,7 +629,7 @@ object OracleSql {
        |FROM c""".stripMargin
 
   /** Distinct-score histogram CTE shared by the rank-based metric oracles
-    * (mirrors Metrics.scoreHistogram). */
+    * (mirrors the per-score counts of the ScoreCurve aggregate). */
   private val scoreHistCte: String =
     """g AS (
       |  SELECT score AS s, CAST(COUNT(*) AS BIGINT) AS n,

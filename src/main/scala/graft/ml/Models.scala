@@ -51,16 +51,18 @@ object Models {
     * bucket size stays ~256 (B² ≈ 65k join rows per bucket); for tiny
     * minorities (< 64 rows) a single bucket is exact global 1-NN. No global
     * windows; ties in distance break to the lowest neighbor id. The
-    * synthetic-row selection rank comes from a PrefixSum over the per-bucket
-    * pair counts broadcast-joined back (round-4 advice: the previous
-    * chained-`when` bucket→offset fold was an O(#buckets) expression tree —
-    * an analyzer blow-up at the ~1M-bucket worst case — fed by an unbounded
-    * driver collect).
+    * synthetic-row selection rank comes from per-bucket offsets: the pair
+    * counts of at most 2^20 buckets are collected, prefix-summed on the
+    * driver and broadcast-joined back as a table, never as an O(#buckets)
+    * expression tree (round-4 advice: an analyzer blow-up at ~1M buckets).
     *
-    * `bitsOverride` pins the bucket-signature width (tests / tuning);
-    * negative = adaptive. */
+    * `bitsOverride` pins the bucket-signature width (tests / tuning) to
+    * 0..20, the adaptive path's cap, which bounds the collected offsets at
+    * 2^20 rows; −1 = adaptive. */
   def oversampleInterpolate(df: DataFrame, idCol: String, labelCol: String,
                             features: Seq[String], bitsOverride: Int = -1): DataFrame = {
+    require(bitsOverride >= -1 && bitsOverride <= 20,
+      s"oversampleInterpolate: bitsOverride=$bitsOverride must be in 0..20 (or -1 for adaptive)")
     val counts = df.groupBy(col(labelCol)).count().collect()
       .map(r => r.get(0) -> r.getLong(1)).toMap
     if (counts.size < 2) return df
@@ -108,18 +110,13 @@ object Models {
     // bucket's exclusive prefix offset + in-bucket rank, a round-robin
     // synthetic index over replicas, keep index < need — the kept rows are a
     // pure function of the input at any parallelism, and exactly `need` rows
-    // survive (indices are distinct and cover [0, reps·pairs)). Offsets come
-    // from a PrefixSum over the per-bucket pair counts, broadcast-joined
-    // back (the offsets table is |occupied buckets| tiny rows, never an
-    // expression tree and never an unbounded collect); totalPairs rides the
-    // prefix pass's grand-total carry for free.
-    val (cum, totals) = graft.ops.PrefixSum.runningSumsWithTotals(
-      paired.groupBy(col("__bkt")).agg(count(lit(1)).as("__bn")),
-      Seq(col("__bkt")), Seq("__bn"))
-    val totalPairs = totals("__bn")
+    // survive (indices are distinct and cover [0, reps·pairs)).
+    val bucketPairs = paired.groupBy(col("__bkt")).agg(count(lit(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val totalPairs = bucketPairs.map(_._2).sum
     if (totalPairs == 0) return df // minority of one row: nothing to interpolate
-    val offsets = cum.select(col("__bkt").as("__o_bkt"),
-      (col("__bn_cum") - col("__bn")).as("__off"))
+    val offsets = df.sparkSession.createDataFrame(
+      bucketPairs.map(_._1).zip(bucketPairs.scanLeft(0L)(_ + _._2)).toSeq).toDF("__o_bkt", "__off")
     val reps = ((need + totalPairs - 1) / totalPairs).toInt
     // λ ∈ (0,1): a seeded overflow-free hash of (bucket, rank, replica) —
     // every synthetic row gets its own interpolation point on the segment,

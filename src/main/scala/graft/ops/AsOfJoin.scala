@@ -238,9 +238,8 @@ object AsOfJoin {
     }
 
     // pass 2: the seeded single-pass InternalRow merge. `incoming` holds P
-    // entries (P = range partitions), so it ships inside the task closure,
-    // as PrefixSum's offsets do; a broadcast would outlive the call with no
-    // owner to destroy it.
+    // entries (P = range partitions), so it ships inside the task closure;
+    // a broadcast would outlive the call with no owner to destroy it.
     val nullPay = nullPayload(p.pStructType)
     val rdd = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       val join = new RowJoiner(p.lStructType, p.pStructType, nullPay)

@@ -1,16 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Categorical encoding + evaluation-fold assignment.
   *
   * Both are the reference's sklearn idioms re-expressed as deterministic,
   * distributed dataflow (no fit/transform object state):
   *   - `labelEncode` = sklearn LabelEncoder (`LR_Advanced.py:535-539`):
-  *     alphabetical code assignment — a tiny distinct+rank dimension joined
-  *     back broadcast;
+  *     alphabetical code assignment — a tiny sorted distinct dimension,
+  *     numbered on the driver and joined back broadcast;
   *   - `stratifiedFolds` = StratifiedKFold(5, shuffle, seed)
   *     (`LR_Advanced.py:610`): per-label round-robin. The reference shuffles
   *     with numpy RNG (not reproducible cross-engine), so the engine orders
@@ -20,26 +22,24 @@ import org.apache.spark.sql.expressions.Window
   */
 object CategoricalOps {
 
-  /** Adds `<col>_code`: 0-based alphabetical rank of the value.
+  /** Adds `<col>_code`: 0-based alphabetical rank among the column's
+    * non-null values (null rows drop out of the join and take no code, as
+    * in the oracle's NULLS LAST ranking).
     *
-    * Scale shape (round-2 fix): the rank over the distinct dimension is a
-    * [[PrefixSum]] parallel prefix (count 1 per distinct value), NOT
-    * `row_number().over(Window.orderBy(c))` — the global window moved every
-    * distinct value to one task and was the last `WindowExec: No Partition
-    * Defined` source in the registered surface. The dimension is then
-    * broadcast back onto the fact side, so `maxCardinality` guards the one
-    * genuinely driver-bound step (the broadcast), failing fast instead of
-    * OOMing mid-job when someone label-encodes a user-id-like column.
-    * EAGER: runs two small jobs (cardinality count + prefix pass 1) at call
-    * time. */
+    * EAGER: one collect at call time of the sorted distinct values, at most
+    * `maxCardinality` + 1 of them; the driver checks the guard, numbers them
+    * and broadcasts the dimension back (no window ranks the values). The
+    * guard fails fast instead of OOMing mid-job when someone label-encodes a
+    * user-id-like column. */
   def labelEncode(df: DataFrame, c: String, maxCardinality: Long = 1000000L): DataFrame = {
-    val dim0 = df.select(col(c)).distinct()
-    val card = dim0.count()
-    require(card <= maxCardinality,
-      s"labelEncode($c): $card distinct values exceed maxCardinality=$maxCardinality — " +
+    val values = df.select(col(c)).where(col(c).isNotNull).distinct().orderBy(col(c))
+      .limit((math.min(maxCardinality, Int.MaxValue - 1L) + 1).toInt).collect()
+    require(values.length <= maxCardinality,
+      s"labelEncode($c): more than maxCardinality=$maxCardinality distinct values — " +
         "a dictionary that size should live in a table and join by shuffle, not broadcast")
-    val dim = PrefixSum.runningSums(dim0.withColumn("__one", lit(1L)), Seq(col(c)), Seq("__one"))
-      .select(col(c), (col("__one_cum") - 1).cast("int").as(s"${c}_code"))
+    val schema = StructType(Seq(df.schema(c), StructField(s"${c}_code", IntegerType, nullable = false)))
+    val dim = df.sparkSession.createDataFrame(
+      values.toIndexedSeq.zipWithIndex.map { case (r, i) => Row(r.get(0), i) }.asJava, schema)
     df.join(broadcast(dim), Seq(c))
   }
 

@@ -2,23 +2,29 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.ThresholdBucket
+import graft.functions.{ScoreCurve, ThresholdBucket}
 
 /** Evaluation-framework dataflow operators (`LR_Model_train/LR_Advanced.py:
   * 656-677`, `OOF_AUC_test.py:336-371`) as distributed aggregations — the
-  * sklearn metric calls become groupBy plans with exact arithmetic (counts +
-  * one final division), so the DuckDB oracle matches bit-for-bit.
+  * sklearn metric calls become aggregate plans with exact arithmetic (counts
+  * + one final division), so the DuckDB oracle matches bit-for-bit. Every
+  * metric is lazy: building one runs no job.
   *
   * Threshold semantics: predict positive when `score >= threshold`, matching
   * the reference (`OOF_AUC_test.py:367` uses `proba >= thr`).
   *
   * Scale shape: NO global single-partition windows anywhere (round 1's
   * `aucRoc` used `rank().over(Window.orderBy(score))`, which moves every
-  * scored row to one task). All rank/cumulative logic now runs over the
-  * DISTINCT-SCORE table (a map-side-combined groupBy first), with global
-  * prefix sums via [[PrefixSum]] (range-partitioned parallel prefix).
+  * scored row to one task). The rank metrics (`aucRoc`, `prCurve`,
+  * `averagePrecision`) project one [[ScoreCurve]] array: a per-task
+  * distinct-score histogram, merged once and bounded by its quantize guard.
   */
 object Metrics {
+
+  /** Default guard of the rank metrics: exact up to 2^20 distinct scores,
+    * a 10^-5 grid above. */
+  private val MaxDistinctScores = 1L << 20
+  private val QuantizeBins = 100000
 
   /** Confusion matrix counts: one row per (label, prediction). */
   def confusion(df: DataFrame, label: String, pred: String): DataFrame =
@@ -46,33 +52,40 @@ object Metrics {
         lit(2.0) * d(col("tp")) + d(col("fp")) + d(col("fn"))).as("f1"))
   }
 
-  /** Per grouping key, total rows `__n` and positives `__p`. The first stage
-    * of every rank-based metric — map-side combined, so the shuffle carries
-    * one row per key (distinct score or threshold bucket), not per row. */
-  private def histogram(df: DataFrame, label: String, key: Column): DataFrame =
-    df.groupBy(key).agg(
-      count(lit(1)).as("__n"),
-      sum(when(col(label) === 1, 1L).otherwise(0L)).as("__p"))
+  /** One row holding the [[ScoreCurve]] `__c` of `score`; label = 1 is
+    * positive, every other label (null included) negative. */
+  private def curve(df: DataFrame, label: String, score: String,
+                    maxDistinctScores: Long, quantizeBins: Int): DataFrame =
+    df.agg(ScoreCurve.score_curve(col(score).cast("double"), col(label) === 1,
+      maxDistinctScores, quantizeBins).as("__c"))
+
+  /** The last curve point, whose `n_cum` / `p_cum` are the totals; null on an
+    * empty curve (`element_at` would throw under ANSI mode). */
+  private val total = try_element_at(col("__c"), lit(-1))
 
   /** ROC AUC via the Mann-Whitney U statistic with average ranks for ties:
-    * AUC = (Σ ranks(positives) − P(P+1)/2) / (P·N).
+    * AUC = (Σ ranks(positives) − P(P+1)/2) / (P·N), null without both
+    * classes. A higher-order sum over the [[ScoreCurve]]: the positives of a
+    * tie group share the rank (total − n_cum) + (n+1)/2, so each group adds
+    * a multiple of 0.5 — exact, so the double sum is order-independent and
+    * oracle-hash-stable.
     *
-    * Plan: distinct-score histogram → [[PrefixSum]] over score order (no
-    * single-partition window) → one aggregate. Every positive in a tie group
-    * shares avg rank (cum_before + (n+1)/2), so the group contribution
-    * p·(cum_before + (n+1)/2) is a multiple of 0.5 — exactly representable,
-    * making the double sum order-independent and oracle-hash-stable. */
+    * The curve's guard applies: exact up to 2^20 distinct scores (every
+    * oracle, spec and bench input); above that, scores are ranked on the
+    * `floor(s·100000)/100000` grid that `prCurve` and `averagePrecision`
+    * use by default. */
   def aucRoc(df: DataFrame, label: String, score: String): DataFrame = {
-    val cum = PrefixSum.runningSums(histogram(df, label, col(score).as("__s")), Seq(col("__s")), Seq("__n"))
-    val contrib = col("__p").cast("double") *
-      ((col("__n_cum") - col("__n")).cast("double") + (col("__n").cast("double") + 1.0) / 2.0)
-    cum.agg(
-      sum(contrib).as("__sumR"),
-      sum(col("__p")).as("__pp"),
-      sum(col("__n") - col("__p")).as("__nn"))
+    val nTot = total.getField("n_cum")
+    val (pp, nn) = (col("__pp").cast("double"), col("__nn").cast("double"))
+    curve(df, label, score, MaxDistinctScores, QuantizeBins)
+      .select(
+        aggregate(col("__c"), lit(0.0), (acc, x) => acc + x.getField("p").cast("double") *
+          ((nTot - x.getField("n_cum")).cast("double") +
+            (x.getField("n").cast("double") + 1.0) / 2.0)).as("__sumR"),
+        total.getField("p_cum").as("__pp"),
+        (nTot - total.getField("p_cum")).as("__nn"))
       .select(when(col("__pp") > 0 && col("__nn") > 0,
-        (col("__sumR") - col("__pp").cast("double") * (col("__pp").cast("double") + 1.0) / 2.0)
-          / (col("__pp").cast("double") * col("__nn").cast("double"))).as("auc"))
+        (col("__sumR") - pp * (pp + 1.0) / 2.0) / (pp * nn)).as("auc"))
   }
 
   /** Calibration bins (`OOF_AUC_test.py` 10 uniform bins): per bin of the
@@ -118,87 +131,48 @@ object Metrics {
         when(den > 0.0, (lit(2.0) * tp) / den).as("f1"))
   }
 
-  /** Guarded cumulative score table for PR metrics: descending prefix sums
-    * over the distinct-score histogram, with the continuous-score quantize
-    * guard. Returns the cumulative table plus the global positive total
-    * (free from the prefix pass-1 carry — no extra agg job).
-    *
-    * Guard: |distinct| also rides the pass-1 carry (`__one`); above
-    * `maxDistinctScores` the histogram is re-aggregated onto a
-    * `floor(score·quantizeBins)/quantizeBins` grid before the prefix pass,
-    * bounding both the fold/collect sizes downstream AND the output row
-    * count at `quantizeBins`+1. EAGER like the PrefixSum it wraps. */
-  private def guardedCumulative(df: DataFrame, label: String, score: String,
-                                maxDistinctScores: Long,
-                                quantizeBins: Int): (DataFrame, Long) = {
-    val g0 = histogram(df, label, col(score).as("__s")).withColumn("__one", lit(1L))
-    val (cum0, tot0) =
-      PrefixSum.runningSumsWithTotals(g0, Seq(col("__s").desc), Seq("__n", "__p", "__one"))
-    if (tot0("__one") <= maxDistinctScores)
-      (cum0.drop("__one", "__one_cum"), tot0("__p"))
-    else {
-      val gq = g0.groupBy((floor(col("__s") * quantizeBins) / quantizeBins).as("__s"))
-        .agg(sum(col("__n")).as("__n"), sum(col("__p")).as("__p"))
-      val (c, t) = PrefixSum.runningSumsWithTotals(gq, Seq(col("__s").desc), Seq("__n", "__p"))
-      (c, t("__p"))
-    }
-  }
-
   /** OOF precision-recall curve (`OOF_AUC_test.py:336-340`): one row per
-    * distinct score threshold with exact cumulative counts; precision and
-    * recall are single divisions of exact longs (oracle-hash-stable).
-    * Continuous scores quantize past `maxDistinctScores` (see
-    * [[guardedCumulative]]) so the curve itself stays bounded — callers that
-    * collect it for plotting (EvalMain) pass a small `quantizeBins`. */
+    * point of the [[ScoreCurve]], descending; precision and recall are single
+    * divisions of exact longs (oracle-hash-stable), recall null without
+    * positives. `threshold` is the score cast to double, whatever the score
+    * column's type. Past `maxDistinctScores` distinct scores the thresholds
+    * are the `floor(s·quantizeBins)/quantizeBins` grid, so the curve itself
+    * stays bounded — callers that collect it for plotting (EvalMain) pass a
+    * small `quantizeBins`. */
   def prCurve(df: DataFrame, label: String, score: String,
-              maxDistinctScores: Long = 1L << 20,
-              quantizeBins: Int = 100000): DataFrame = {
-    val (cum, tpTotal) =
-      guardedCumulative(df, label, score, maxDistinctScores, quantizeBins)
-    cum.select(
-      col("__s").as("threshold"),
-      col("__p_cum").as("tp"),
-      col("__n_cum").as("n_pred"),
-      (col("__p_cum").cast("double") / col("__n_cum").cast("double")).as("precision"),
-      when(lit(tpTotal) > 0,
-        col("__p_cum").cast("double") / lit(tpTotal).cast("double")).as("recall"))
+              maxDistinctScores: Long = MaxDistinctScores,
+              quantizeBins: Int = QuantizeBins): DataFrame = {
+    val tp = col("p_cum").cast("double")
+    curve(df, label, score, maxDistinctScores, quantizeBins)
+      .select(inline(col("__c")), total.getField("p_cum").as("__pt"))
+      .select(col("s").as("threshold"), col("p_cum").as("tp"), col("n_cum").as("n_pred"),
+        (tp / col("n_cum").cast("double")).as("precision"),
+        when(col("__pt") > 0, tp / col("__pt").cast("double")).as("recall"))
   }
 
   /** Average precision (sklearn `average_precision_score`, the reference's
     * headline PR-AUC): AP = Σ_j ΔR_j · P_j over thresholds = distinct scores
-    * descending, ΔR_j = p_j/P, P_j = tp_j/n_pred_j.
+    * descending, ΔR_j = p_j/P, P_j = tp_j/n_pred_j; 0.0 without positives.
     *
     * The terms are inexact doubles, so the REDUCTION order matters for
-    * bit-parity: both this plan and the DuckDB oracle fold the (tiny,
-    * |distinct scores|-sized) term list sequentially in ascending-score
-    * order — collect_list → sort_array → aggregate here, list(... ORDER BY
-    * score) → list_reduce there — giving a bit-reproducible scalar. The
-    * heavy work (histogram, prefix sums) is all distributed; only the final
-    * |distinct|-element fold is single-node, and it arrives pre-aggregated.
+    * bit-parity: both this plan and the DuckDB oracle fold the term list
+    * sequentially in ascending-score order — `aggregate(reverse(curve))`
+    * here, list(... ORDER BY score) → list_reduce there — giving a
+    * bit-reproducible scalar.
     *
-    * Continuous-score guard (round-2 fix): for continuous double scores
-    * |distinct| ≈ |rows|, which would funnel every row into that one fold
-    * buffer. The distinct-score count (and the positive total) come FREE
-    * from the prefix pass-1 carry — no extra guard job; above
-    * `maxDistinctScores` the histogram is re-aggregated onto a
-    * `floor(score·quantizeBins)/quantizeBins` grid before the prefix/fold
-    * stages, bounding the fold at `quantizeBins`+1 terms. Quantized AP is
-    * an approximation (standard for at-scale PR metrics); the default
-    * threshold (2^20 distinct) keeps every exact-oracle use on the exact
-    * path. EAGER like the PrefixSum it wraps. */
+    * Guard: past `maxDistinctScores` (continuous scores) the [[ScoreCurve]]
+    * moves onto the `floor(score·quantizeBins)/quantizeBins` grid, bounding
+    * the fold at `quantizeBins`+1 terms. Quantized AP is an approximation
+    * (standard for at-scale PR metrics); the default bound (2^20 distinct)
+    * keeps every exact-oracle use on the exact path. */
   def averagePrecision(df: DataFrame, label: String, score: String,
-                       maxDistinctScores: Long = 1L << 20,
-                       quantizeBins: Int = 100000): DataFrame = {
-    val (cum, tpTotal) =
-      guardedCumulative(df, label, score, maxDistinctScores, quantizeBins)
-    val term = (col("__p").cast("double") / lit(tpTotal).cast("double")) *
-      (col("__p_cum").cast("double") / col("__n_cum").cast("double"))
-    cum
-      .filter(lit(tpTotal) > 0L) // no positives ⇒ empty term list ⇒ 0.0 (oracle-identical)
-      .select(col("__s"), term.as("__term"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("__s"), col("__term")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("__term")).as("auc_pr"))
+                       maxDistinctScores: Long = MaxDistinctScores,
+                       quantizeBins: Int = QuantizeBins): DataFrame = {
+    val pTot = total.getField("p_cum")
+    curve(df, label, score, maxDistinctScores, quantizeBins)
+      .select(when(pTot > 0, aggregate(reverse(col("__c")), lit(0.0), (acc, x) =>
+        acc + (x.getField("p").cast("double") / pTot.cast("double")) *
+          (x.getField("p_cum").cast("double") / x.getField("n_cum").cast("double"))))
+        .otherwise(0.0).as("auc_pr"))
   }
 }

@@ -1,12 +1,14 @@
 package graft
 
+import java.lang.Double.{doubleToLongBits, longBitsToDouble}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.ops.{Metrics, PrefixSum}
+import graft.functions.ScoreCurve
+import graft.ops.Metrics
 
-/** Scale-safe metrics: the grouped/parallel-prefix plans must equal the
-  * direct row-level definitions (which round 1 computed with a
-  * single-partition global window — the plan shape these replaced). */
+/** Scale-safe metrics: the aggregate plans must equal the direct row-level
+  * definitions (which round 1 computed with a single-partition global
+  * window — the plan shape these replaced). */
 class MetricsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,34 +22,86 @@ class MetricsSpec extends SparkSpec {
     }.toDF("id", "y", "score")
   }
 
-  test("prefix sums match the global-window cumsum, any partitioning") {
-    val df = (1 to 1000).map(i => (i.toLong, (i % 97).toLong)).toDF("k", "v")
-      .repartition(7) // scramble input
-    for (parts <- Seq(1, 3, 8)) {
-      val got = PrefixSum.runningSums(df, Seq(col("k")), Seq("v"), numPartitions = parts)
-        .select("k", "v_cum").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val exp = df.withColumn("v_cum",
-        sum("v").over(Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select("k", "v_cum").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == exp, s"parts=$parts")
+  private type Labelled = Seq[(Option[Int], Option[Double])]
+
+  private def labelled(df: DataFrame): Labelled =
+    df.select(col("y"), col("score")).collect().toSeq.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Int]), Option(r.get(1)).map(_.asInstanceOf[Double])))
+
+  /** Each row as (label = 1, rank of its score in Spark's ascending order:
+    * null first, NaN last, −0.0 = 0.0), plus the distinct scores by rank. */
+  private def ranked(rows: Labelled): (Seq[(Boolean, Int)], IndexedSeq[Option[Double]]) = {
+    val key = (s: Option[Double]) => s.map(x => doubleToLongBits(if (x == 0.0) 0.0 else x))
+    val asc = rows.map(r => key(r._2)).distinct
+      .sortBy(_.map(longBitsToDouble))(Ordering.Option(Ordering.Double.TotalOrdering)).toIndexedSeq
+    val rank = asc.zipWithIndex.toMap
+    (rows.map { case (y, s) => (y.contains(1), rank(key(s))) }, asc.map(_.map(longBitsToDouble)))
+  }
+
+  /** Mann-Whitney AUC with average ranks for ties, row by row; every row
+    * whose label is not 1 is a negative. */
+  private def aucRef(rows: Labelled): Option[Double] = {
+    val (rs, _) = ranked(rows)
+    val p = rs.count(_._1).toDouble
+    val n = rs.size - p
+    val sumR = rs.filter(_._1).map { case (_, k) =>
+      rs.count(_._2 < k) + (rs.count(_._2 == k) + 1) / 2.0
+    }.sum
+    if (p > 0 && n > 0) Some((sumR - p * (p + 1) / 2.0) / (p * n)) else None
+  }
+
+  /** PR curve per distinct score, descending: (threshold, tp, n_pred,
+    * precision, recall), predicting positive at score >= threshold. */
+  private def curveRef(rows: Labelled): Seq[(Option[Double], Long, Long, Double, Option[Double])] = {
+    val (rs, asc) = ranked(rows)
+    val total = rs.count(_._1)
+    asc.indices.reverse.map { k =>
+      val tp = rs.count(r => r._1 && r._2 >= k).toLong
+      val np = rs.count(_._2 >= k).toLong
+      (asc(k), tp, np, tp.toDouble / np, if (total > 0) Some(tp.toDouble / total) else None)
     }
   }
 
-  test("aucRoc (grouped + parallel prefix) equals the direct rank formula") {
-    val got = Metrics.aucRoc(scored, "y", "score").collect()(0).getDouble(0)
-    // direct Mann-Whitney with average ranks, plain Scala
-    val rows = scored.select("y", "score").collect().map(r => (r.getInt(0), r.getDouble(1)))
-    val sorted = rows.sortBy(_._2)
-    val byScore = sorted.groupBy(_._2)
-    val rankOf = byScore.map { case (s, g) =>
-      val before = sorted.count(_._2 < s)
-      s -> (before + (g.length + 1) / 2.0)
+  /** AP = Σ ΔR·P over descending thresholds; 0 without positives. */
+  private def apRef(rows: Labelled): Double = {
+    val total = rows.count(_._1.contains(1)).toDouble
+    var prevTp = 0L
+    if (total == 0) 0.0
+    else curveRef(rows).map { case (_, tp, _, prec, _) =>
+      val term = ((tp - prevTp) / total) * prec
+      prevTp = tp
+      term
+    }.sum
+  }
+
+  private def assertClose(got: Option[Double], exp: Option[Double], what: String): Unit =
+    assert(got.isDefined == exp.isDefined && got.zip(exp).forall { case (g, e) =>
+      math.abs(g - e) < 1e-12 }, s"$what: got=$got exp=$exp")
+
+  /** Every rank metric of `df` against the row-level references. */
+  private def checkRankMetrics(df: DataFrame): Unit = {
+    val rows = labelled(df)
+    val auc = Metrics.aucRoc(df, "y", "score").collect()
+    assert(auc.length == 1)
+    assertClose(Option(auc(0).get(0)).map(_.asInstanceOf[Double]), aucRef(rows), "aucRoc")
+    val bits = (s: Option[Double]) => s.map(doubleToLongBits)
+    val got = Metrics.prCurve(df, "y", "score").collect().toSeq.map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Double]), r.getLong(1), r.getLong(2), r.getDouble(3),
+        Option(r.get(4)).map(_.asInstanceOf[Double])))
+    val exp = curveRef(rows)
+    assert(got.map(r => (bits(r._1), r._2, r._3)) == exp.map(r => (bits(r._1), r._2, r._3)),
+      s"prCurve points:\n$got\n$exp")
+    got.zip(exp).foreach { case (g, e) =>
+      assertClose(Some(g._4), Some(e._4), s"precision@${g._1}")
+      assertClose(g._5, e._5, s"recall@${g._1}")
     }
-    val p = rows.count(_._1 == 1).toDouble
-    val n = rows.count(_._1 == 0).toDouble
-    val sumR = rows.filter(_._1 == 1).map(r => rankOf(r._2)).sum
-    val exp = (sumR - p * (p + 1) / 2.0) / (p * n)
-    assert(math.abs(got - exp) < 1e-12, s"got=$got exp=$exp")
+    assertClose(Some(Metrics.averagePrecision(df, "y", "score").collect()(0).getDouble(0)),
+      Some(apRef(rows)), "averagePrecision")
+  }
+
+  test("aucRoc (one score-curve aggregate) equals the direct rank formula") {
+    val got = Metrics.aucRoc(scored, "y", "score").collect()(0).getDouble(0)
+    assertClose(Some(got), aucRef(labelled(scored)), "aucRoc")
   }
 
   test("thresholdScan (histogram-first) equals per-row counting at >= semantics") {
@@ -64,34 +118,55 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("prCurve and averagePrecision equal the sklearn-style definition") {
-    val rows = scored.select("y", "score").collect().map(r => (r.getInt(0), r.getDouble(1)))
-    val total = rows.count(_._1 == 1).toDouble
-    val descScores = rows.map(_._2).distinct.sorted.reverse
-    val expCurve = descScores.map { s =>
-      val tp = rows.count(r => r._1 == 1 && r._2 >= s).toLong
-      val np = rows.count(r => r._2 >= s).toLong
-      s -> (tp, np, tp.toDouble / np, tp / total)
-    }.toMap
-    val gotCurve = Metrics.prCurve(scored, "y", "score").collect()
-      .map(r => r.getDouble(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    assert(gotCurve.keySet == expCurve.keySet)
-    gotCurve.foreach { case (s, (tp, np, prec, rec)) =>
-      val (etp, enp, eprec, erec) = expCurve(s)
-      assert(tp == etp && np == enp)
-      assert(math.abs(prec - eprec) < 1e-12 && math.abs(rec - erec) < 1e-12)
+    checkRankMetrics(scored)
+  }
+
+  test("rank metrics: null/NaN/-0.0 scores, null labels, empty and one-class input") {
+    val mixed: Labelled = Seq(
+      (Some(1), Some(0.0)), (Some(0), Some(-0.0)), (Some(1), Some(-0.0)), (None, Some(0.0)),
+      (Some(1), Some(Double.NaN)), (Some(0), Some(Double.NaN)), (None, Some(Double.NaN)),
+      (Some(1), None), (Some(0), None), (None, None),
+      (Some(1), Some(0.7)), (None, Some(0.5)), (Some(0), Some(-1.0)),
+      (Some(1), Some(Double.PositiveInfinity)), (Some(0), Some(Double.NegativeInfinity)))
+    val onlyPositive: Labelled = Seq((Some(1), Some(0.3)), (Some(1), Some(0.9)), (Some(1), Some(0.3)))
+    val onlyNegative: Labelled = onlyPositive.map { case (_, s) => (Some(0), s) }
+    Seq(mixed, Seq.empty, onlyPositive, onlyNegative).foreach(rows =>
+      checkRankMetrics(rows.toDF("y", "score").repartition(3)))
+    // the degenerate values the references encode, spelled out
+    val empty = Seq.empty[(Option[Int], Option[Double])].toDF("y", "score")
+    assert(Metrics.aucRoc(empty, "y", "score").collect().toSeq == Seq(Row(null)))
+    assert(Metrics.prCurve(empty, "y", "score").collect().isEmpty)
+    assert(Metrics.averagePrecision(empty, "y", "score").collect().toSeq == Seq(Row(0.0)))
+  }
+
+  test("ScoreCurve guard: exact at the bound, the raw-score grid above it, merges included") {
+    // 40 distinct scores in 4 slices of 10: with a bound of 20 every partial
+    // buffer stays exact and only the merges cross it
+    val rnd = new scala.util.Random(5)
+    val df = spark.sparkContext.parallelize((0 until 40).map { i =>
+      val s = (i + rnd.nextDouble()) / 40.0
+      (if (rnd.nextDouble() < s) 1 else 0, s)
+    }, 4).toDF("y", "score")
+    val bins = 8
+    def got(bound: Long) = df.agg(ScoreCurve.score_curve(col("score"), col("y") === 1, bound, bins))
+      .collect()(0).getSeq[Row](0).map(r =>
+        (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    // reference: Spark's own grouping, on the raw scores or on its own
+    // floor(s·bins)/bins grid, then running sums in descending order
+    def ref(key: org.apache.spark.sql.Column) = {
+      val g = df.groupBy(key.as("s"))
+        .agg(count(lit(1)), sum(when(col("y") === 1, 1L).otherwise(0L)))
+        .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).sortBy(-_._1)
+      g.zip(g.scanLeft((0L, 0L)) { case ((n, p), r) => (n + r._2, p + r._3) }.tail)
+        .map { case ((s, n, p), (nc, pc)) => (s, n, p, nc, pc) }.toSeq
     }
-    // AP = Σ ΔR·P over descending thresholds
-    var expAp = 0.0
-    var prevTp = 0L
-    descScores.foreach { s =>
-      val (tp, np, prec, _) = {
-        val e = expCurve(s); (e._1, e._2, e._3, e._4)
-      }
-      expAp += ((tp - prevTp) / total) * prec
-      prevTp = tp
-    }
-    val gotAp = Metrics.averagePrecision(scored, "y", "score").collect()(0).getDouble(0)
-    assert(math.abs(gotAp - expAp) < 1e-12, s"got=$gotAp exp=$expAp")
+    val exact = ref(col("score"))
+    val grid = ref(floor(col("score") * bins) / bins)
+    assert(exact.length == 40 && grid.length == bins)
+    assert(got(40) == exact, "at the bound")
+    assert(got(39) == grid, "one above the bound")
+    assert(got(20) == grid, "partials under the bound, merges over it")
+    assert(got(5) == grid, "partials over the bound")
   }
 
   test("averagePrecision auto-quantizes continuous scores; bounded fold matches quantized reference") {
@@ -198,7 +273,7 @@ class MetricsSpec extends SparkSpec {
     }
   }
 
-  test("thresholdScan is lazy: building runs no job, collecting caches nothing") {
+  test("thresholdScan and rank metrics are lazy: building runs no job, nothing cached") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val cacheManager =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
@@ -220,16 +295,20 @@ class MetricsSpec extends SparkSpec {
     sc.addSparkListener(listener)
     val built =
       try {
-        val df = Metrics.thresholdScan(input, "y", "score", (1 to 99).map(_ / 100.0))
+        val dfs = Seq(
+          Metrics.thresholdScan(input, "y", "score", (1 to 99).map(_ / 100.0)),
+          Metrics.aucRoc(input, "y", "score"),
+          Metrics.averagePrecision(input, "y", "score"),
+          Metrics.prCurve(input, "y", "score"))
         // the bus delivers events in order: once the marker job's start
         // arrives, every job started while building has been counted
         sc.setLocalProperty("graft.spec.marker", "1")
         try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
         assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-        df
+        dfs
       } finally sc.removeSparkListener(listener)
     assert(jobs.get == 0, s"building ran ${jobs.get} job(s)")
-    assert(built.collect().length == 99)
+    assert(built.map(_.collect().length) == Seq(99, 1, 1, 21))
     assert(cachedEntries == cachedBefore, "cache manager entry left behind")
     assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "persistent RDD left behind")
   }

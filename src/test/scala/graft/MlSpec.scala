@@ -117,6 +117,11 @@ class MlSpec extends SparkSpec {
     val b = Models.oversampleInterpolate(df.repartition(17), "id", "y", feats,
       bitsOverride = 14).filter(col("id") < 0).collect().map(_.toSeq).toSet
     assert(a == b, "bits=14 synthetics depend on partitioning")
+    // past the adaptive cap of 20 bits the offsets table could outgrow a
+    // bounded collect, so the override fails before any job
+    val e = intercept[IllegalArgumentException](
+      Models.oversampleInterpolate(df, "id", "y", feats, bitsOverride = 21))
+    assert(e.getMessage.contains("bitsOverride=21"))
   }
 
   test("oversampler: synthetic set is partitioning-invariant and balances exactly") {

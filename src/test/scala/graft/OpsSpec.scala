@@ -148,6 +148,16 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("maxCardinality"))
   }
 
+  test("labelEncode: a null value takes no code; codes count from 0 as in the oracle") {
+    val df = Seq(Some("b"), None, Some("a"), Some("b")).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("id", "event_type")
+    val got = CategoricalOps.labelEncode(df, "event_type").select("id", "event_type_code")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // a = 0, b = 1 (DuckDB ranks with NULLS LAST); the null row drops out
+    // of the equi-join
+    assert(got == Map(0L -> 1, 2L -> 0, 3L -> 1))
+  }
+
   test("lag/lead: dt_prev equals gap, prev/next roles consistent") {
     val ll = LagLead.withLagLead(turns.toDF(), cols, textCol = Some("text"))
       .select("conv_id", "turn_idx", "prev_role", "next_role", "dt_prev_us", "turn_rank")

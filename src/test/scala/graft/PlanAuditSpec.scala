@@ -12,6 +12,29 @@ class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Every node of `df`'s pre-AQE physical plan. The walk must see THROUGH
+    * InMemoryRelation: an operator that persists an intermediate during
+    * construction (only `ivfLists` does) gets its upstream plan swapped for
+    * a cached scan by the CacheManager, and whether that swap happens
+    * depends on what ran before, so an allowlist entry would flip
+    * needed/stale with test order. Walking the cachedPlan makes the sweeps
+    * deterministic and audits the plan that actually produced the cached
+    * data. */
+  private def nodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // explicit recursion: AdaptiveSparkPlanExec / QueryStageExec /
+    // InMemoryTableScanExec all hide their real subtree from `children`
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.sparkPlan)
+  }
+
   private def planOf(name: String): String = {
     val df: DataFrame = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -134,6 +157,10 @@ class PlanAuditSpec extends SparkSpec {
     // documented scale path is approxAccuracy → approx_percentile (SURVEY
     // §2.3), so the exact default stays allowlisted where the pipeline runs
     val pct = "exact Percentile agg (slot-grain; approx_percentile scale path)"
+    // the rank metrics' one aggregate: a TypedImperativeAggregate, so
+    // CodegenFallback by construction like CosTopK, whose array holds at
+    // most maxDistinctScores (or quantizeBins + 1) points
+    val curve = "the ScoreCurve aggregate (bounded by its quantize guard)"
     val allow: Map[String, String] = Map(
       "q_lsh_pairs" -> "banding transform over the 12-element signature of DISTINCT texts",
       "q_jaccard_verify" -> "same banding + set ops over LSH candidate pairs only",
@@ -144,8 +171,9 @@ class PlanAuditSpec extends SparkSpec {
       "q_top_entities" -> pct, "q_variance_screen" -> pct, "q_iqr_clip" -> pct,
       "q_confusion" -> pct, "q_binary_metrics" -> pct, "q_calibration" -> pct,
       "q_threshold_scan" -> pct, "q_impute" -> pct, "q_unpivot" -> pct,
-      "q_auc_pr" -> ("final collect_list/sort/fold over the distinct-score table " +
-        "(bounded by averagePrecision's auto-quantize guard)"),
+      "q_auc_roc" -> s"$pct, plus $curve and the higher-order rank sum over its points",
+      "q_pr_curve" -> s"$pct, plus $curve",
+      "q_auc_pr" -> s"$pct, plus $curve and the ascending higher-order fold over its points",
       "q_ann_batch" -> ("native CosTopK bounded-heap aggregate — O(k) state per " +
         "buffer, partial-aggregated (TypedImperativeAggregate is CodegenFallback " +
         "by construction, like Percentile)"),
@@ -153,32 +181,8 @@ class PlanAuditSpec extends SparkSpec {
       "q_ann_lsh_batch" -> ("same CosTopK bounded-heap aggregate (the bucket " +
         "projection is now the native codegen'd LshBucket)")
     )
-    // The audit must see THROUGH InMemoryRelation: an operator that persists
-    // an intermediate during construction (only `ivfLists` does) gets its
-    // upstream plan swapped for a cached scan by the CacheManager, and
-    // whether that swap happens depends on what ran before, so an allowlist
-    // entry would flip needed/stale with test order. Walking the cachedPlan
-    // makes the sweep deterministic and audits the plan that actually
-    // produced the cached data.
-    def fallbacks(df: DataFrame): Seq[String] = {
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-      // explicit recursion: AdaptiveSparkPlanExec / QueryStageExec /
-      // InMemoryTableScanExec all hide their real subtree from `children`
-      def walk(p: SparkPlan): Seq[String] = {
-        val here = p.expressions.flatMap(
-          _.collect { case f: CodegenFallback => f.getClass.getSimpleName })
-        val below = p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          case s: QueryStageExec => walk(s.plan)
-          case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
-          case _ => p.children.flatMap(walk)
-        }
-        here ++ below
-      }
-      walk(df.queryExecution.sparkPlan)
-    }
+    def fallbacks(df: DataFrame): Seq[String] = nodes(df).flatMap(_.expressions.flatMap(
+      _.collect { case f: CodegenFallback => f.getClass.getSimpleName }))
     // self-check: a HOF aggregate is CodegenFallback (over a non-foldable
     // input — a literal would be constant-folded into a LocalRelation)
     import org.apache.spark.sql.functions._
@@ -197,6 +201,35 @@ class PlanAuditSpec extends SparkSpec {
     // allowlist hygiene: drop entries that no longer fall back
     val stale = allow.keySet -- offending.keySet
     assert(stale.isEmpty, s"allowlist entries no longer needed: $stale")
+  }
+
+  test("only the allowlisted queries end at an RDD leaf (justified allowlist)") {
+    // An RDD wrapped as a DataFrame is a leaf that hides the plan which built
+    // it from EXPLAIN, AQE and every audit in this suite, and it usually
+    // means jobs ran while the query was built. Each allowlisted query names
+    // why its operator still needs one.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec}
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import spark.implicits._
+    val allow: Map[String, String] = Map(
+      "q_asof_bcast" -> ("AsOfJoin.broadcastIndex: a map-only probe of a collected, " +
+        "size-guarded right-side index"),
+      "q_asof_scalable" -> ("AsOfJoin.mergedScalable: a seeded merge over range partitions, " +
+        "stitched by a driver-side carry pass"))
+    def rddLeaves(df: DataFrame): Seq[String] = nodes(df).collect {
+      case r: RDDScanExec => r.nodeName
+      case r: ExternalRDDScanExec[_] => r.nodeName
+    }
+    // self-check: both ways of wrapping an RDD
+    val rows = spark.sparkContext.parallelize(Seq(Row(1)))
+    assert(rddLeaves(spark.createDataFrame(rows, StructType(Seq(StructField("x", IntegerType))))).nonEmpty &&
+      rddLeaves(spark.sparkContext.parallelize(Seq(1)).toDF("x")).nonEmpty,
+      "detector failed its self-check")
+    val found = SparkEntry.queries.keys.toSeq.sorted.filterNot(constructsByTraining)
+      .filter(q => rddLeaves(SparkEntry.queries(q)(spark, dir)).nonEmpty).toSet
+    assert(found -- allow.keySet == Set.empty, s"queries with an unjustified RDD leaf: ${found -- allow.keySet}")
+    assert(allow.keySet -- found == Set.empty, s"allowlist entries no longer needed: ${allow.keySet -- found}")
   }
 
   test("every top-level main object is named in main code outside its own declaration, or is an entry point") {
