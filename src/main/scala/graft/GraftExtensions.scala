@@ -14,15 +14,18 @@ import graft.functions._
   *   spark.sql("SELECT cosine_sim(a.emb, b.emb) FROM ...")
   *   spark.sql("SELECT minhash_sig(text, 3, 12) FROM docs")
   *
-  * plus the native as-of join operator (logical node → physical merge exec).
+  * plus the native as-of join and point-in-time sweep operators (logical
+  * node → physical exec).
   * For an already-built session (tests, notebooks) use
   * [[GraftFunctions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(e.injectFunction)
-    // the native as-of join operator (logical node -> physical merge exec)
+    // the native as-of join and point-in-time sweep operators (logical
+    // node -> physical exec)
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.PitSweepStrategy)
   }
 }
 

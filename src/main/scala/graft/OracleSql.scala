@@ -258,7 +258,10 @@ object OracleSql {
 
   /** Flagship PIT backfill over events: tumbling-hour window states →
     * running per-entity stats → engineered layers → ASOF join to every event
-    * anchor (completed windows only). Mirrors PitPipeline.anchorFeatures. */
+    * anchor (completed windows only). Mirrors PitPipeline.anchorFeatures'
+    * semantics, not its plan: the engine picks the same completed-window
+    * state in its one-pass sweep, which this ASOF JOIN on
+    * `ts >= window_end` expresses declaratively. */
   val qPitBackfill: String = {
     val wcs = quartet.map(q =>
       s"CAST(SUM(CASE WHEN event_type = '$q' THEN 1 ELSE 0 END) AS BIGINT) AS ${q}_wc").mkString(",\n    ")
@@ -640,12 +643,14 @@ object OracleSql {
   /** ROC AUC via Mann-Whitney with average ranks for ties, in the grouped
     * form Metrics.aucRoc computes: per tie group the positives contribute
     * p·(cum_before + (n+1)/2) — a multiple of 0.5, so the double sum is
-    * order-independent and hash-stable. */
+    * order-independent and hash-stable. NULLS FIRST is Spark's ascending
+    * order, so a null score ranks lowest in both engines (DuckDB's default
+    * would rank it highest). */
   val qAucRoc: String =
     s"""WITH $scoredCte,
        |$scoreHistCte,
        |w AS (
-       |  SELECT p, n, CAST(SUM(n) OVER (ORDER BY s) AS BIGINT) AS cum_n FROM g
+       |  SELECT p, n, CAST(SUM(n) OVER (ORDER BY s NULLS FIRST) AS BIGINT) AS cum_n FROM g
        |),
        |agg AS (
        |  SELECT

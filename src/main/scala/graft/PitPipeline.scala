@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.ops._
 import graft.features.{BehaviorBinding, FeatureLayers}
 
@@ -16,16 +17,24 @@ import graft.features.{BehaviorBinding, FeatureLayers}
   *      min/max/avg and total of each role count — the reference's
   *      entity-stats hierarchy (`mean_features.py:20-26`) made point-in-time;
   *   4. engineered layers over the running states (`LR_Advanced.py:394-473`);
-  *   5. as-of join: each anchor (conv, ts) picks the feature state of the
+  *   5. as-of pick: each anchor (conv, ts) takes the feature state of the
   *      latest window with window_end <= ts (strictly completed windows —
   *      zero leakage: a turn never sees counts from its own still-open
   *      window, let alone future ones).
   *
-  * Scale shape: stages 1-2 are one shuffle (hash by conv+window with partial
-  * aggregation); stages 3-4 one window sort per conversation; stage 5 the
-  * range-partitioned merge. The state table is |windows| rows — typically
-  * 100-1000× smaller than the turn table, which is what makes the final
-  * as-of join cheap relative to the scan.
+  * `windowStates` and `featureStates` build stages 1-3 and 1-4 at window
+  * grain from Spark's own aggregate and window operators; they are the
+  * independent reference the backfill is checked against.
+  *
+  * Scale shape of `anchorFeatures`: ONE shuffle and ONE sweep. Stage 1 is a
+  * projection; the turns are then hash-partitioned by conv once, sorted by
+  * (conv, window_start), and [[graft.plans.PitSweep]] runs stages 2-5 in a
+  * single pass per partition: it counts each window's roles, folds the
+  * closed window into the running stats, evaluates the feature layers once
+  * per completed window and emits every turn with its conversation's last
+  * completed state. No per-window table is materialised or shuffled, and
+  * the anchors are not shuffled a second time. A conversation stays on one
+  * task (the `maxKeyRun` metric of the sweep shows the longest).
   */
 object PitPipeline {
 
@@ -58,25 +67,33 @@ object PitPipeline {
                     binding: BehaviorBinding, widthSec: Long): DataFrame =
     FeatureLayers.applyTo(windowStates(turns, c, roles, widthSec), binding)
 
-  /** Full backfill: feature vector at every turn anchor (stages 1-5).
-    * Anchors with no completed window yet get null features (first-window
-    * turns) — exactly the zero-history case. */
+  /** Full backfill: feature vector at every turn anchor (stages 1-5), as
+    * (conv, seq, ts) ++ the `featureStates` payload (stats ++ features, all
+    * nullable). Anchors with no completed window yet get null features
+    * (first-window turns) — exactly the zero-history case.
+    *
+    * Null semantics: null convs form one conversation. A null ts falls in a
+    * null window that sorts first: it is the first completed window of every
+    * later turn of its conversation, and the null-ts anchor itself gets null
+    * features. (Until the sweep, such an anchor saw its own still-open null
+    * window — e.g. `user_count = 1` for one null-ts user turn; the DuckDB
+    * ASOF form, which never matches a null ts, agrees with the sweep.)
+    *
+    * Fails before any job on `widthSec <= 0`, empty or repeated roles, a
+    * binding role missing from `roles`, a key type outside the as-of
+    * whitelist, or a ts that is not a timestamp. */
   def anchorFeatures(turns: DataFrame, c: TranscriptCols, roles: Seq[String],
                      binding: BehaviorBinding, widthSec: Long): DataFrame = {
-    val states = featureStates(turns, c, roles, binding, widthSec)
-    val payload = states.columns.filterNot(Set(c.conv, "window_start", "window_end").contains).toSeq
-    val anchors = turns.select(col(c.conv), col(c.seq), col(c.ts))
-    // align the right side's timestamp column name with the anchors' ts:
-    // the as-of key is window_end (completed windows only). The native
-    // planned operator (graft.plans.AsOfPlan) keeps the WHOLE pipeline
-    // visible to EXPLAIN/AQE (no RDD boundary) and needs no dedup pass —
-    // its (key, ts, seq) sort makes the last row win, and states are unique
-    // per (conv, window_end) by construction anyway. Fastest variant
-    // measured (sf0.1: 0.6 s vs 1.0 s for the hand-built merge).
-    graft.plans.AsOfPlan.asOfJoin(
-      left = anchors,
-      right = states.withColumnRenamed("window_end", c.ts),
-      key = c.conv, ts = c.ts, rightSeq = "window_start",
-      payload = payload, prefix = "")
+    require(widthSec > 0, s"PitPipeline.anchorFeatures: widthSec must be > 0, got $widthSec")
+    val unbound = Seq(binding.pv, binding.cart, binding.fav, binding.buy).filterNot(roles.contains)
+    require(unbound.isEmpty, s"PitPipeline.anchorFeatures: binding roles ${unbound.mkString(", ")} " +
+      s"are not among roles ${roles.mkString(", ")}")
+    val tsDt = turns.schema(c.ts).dataType
+    require(tsDt == TimestampType || tsDt == TimestampNTZType,
+      s"PitPipeline.anchorFeatures: ts '${c.ts}' must be timestamp or timestamp_ntz, got $tsDt")
+    val input = turns.select(col(c.conv), col(c.seq), col(c.ts), col(c.role),
+      Windowize.tumblingStart(col(c.ts), widthSec).as("window_start"))
+    graft.plans.PitSweep(input, key = c.conv, windowStart = "window_start", role = c.role,
+      anchor = Seq(c.conv, c.seq, c.ts), roles = roles, features = FeatureLayers.inlined(binding))
   }
 }

@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 /** The reference's 3-layer feature hierarchy, as a declarative formula table.
@@ -142,6 +142,16 @@ object FeatureLayers {
     }
     // restore the reference's column order (leveling appends out of order)
     staged.select((df.columns.map(col) ++ fs.map(f => col(f._1))).toIndexedSeq: _*)
+  }
+
+  /** The features inlined down to the Basic-layer columns, one named Column
+    * each, in formula order: the form [[sqlProjections]] renders as SQL and
+    * the point-in-time sweep evaluates once per completed window. Inlining
+    * keeps every value's op sequence, so the doubles are bit-identical to
+    * [[applyTo]]'s staged columns. */
+  def inlined(b: BehaviorBinding): Seq[Column] = {
+    val r = resolver(b)
+    formulas(b).map { case (n, ex) => Formula.toColumn(ex, r).as(n) }
   }
 
   /** The same features as SQL projection snippets: name -> expression text. */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-/** Backward (point-in-time) as-of join — the engine's flagship operator.
+/** Backward (point-in-time) as-of join.
   *
   * For every left row (key, ts), attach the payload of the LATEST right row
   * with the same key and right.ts <= left.ts (inclusive); null if none.
@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   *
   * Spark has no built-in as-of join. The native Catalyst operator
   * ([[graft.plans.AsOfPlan.asOfJoin]]: a logical node, a strategy and a
-  * hash-partitioned single-pass merge exec) is the engine's as-of join and
-  * the one the flagship runs. This object holds the variants that serve
+  * hash-partitioned single-pass merge exec) is the engine's as-of join; the
+  * flagship backfill picks its as-of state inside its own sweep
+  * ([[graft.plans.PitSweep]]). This object holds the variants that serve
   * inputs the planned exec does not (property-tested identical in
   * AsOfJoinSpec):
   *

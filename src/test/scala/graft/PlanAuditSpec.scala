@@ -20,19 +20,21 @@ class PlanAuditSpec extends SparkSpec {
     * needed/stale with test order. Walking the cachedPlan makes the sweeps
     * deterministic and audits the plan that actually produced the cached
     * data. */
-  private def nodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
+  private def nodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    walk(df.queryExecution.sparkPlan)
+
+  /** `p` and every node below it. Explicit recursion: AdaptiveSparkPlanExec
+    * / QueryStageExec / InMemoryTableScanExec all hide their real subtree
+    * from `children`. */
+  private def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // explicit recursion: AdaptiveSparkPlanExec / QueryStageExec /
-    // InMemoryTableScanExec all hide their real subtree from `children`
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    p +: (p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case s: QueryStageExec => walk(s.plan)
       case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
       case _ => p.children.flatMap(walk)
     })
-    walk(df.queryExecution.sparkPlan)
   }
 
   private def planOf(name: String): String = {
@@ -90,17 +92,18 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("q_pit_backfill EXPLAIN shows the whole pipeline through the native as-of") {
-    Seq("q_pit_backfill", "q_asof_join").foreach { q =>
-      val p = planOf(q)
-      assert(p.contains("AsOfMerge"), s"$q: native as-of missing:\n$p")
-      assert(!p.contains("Scan ExistingRDD"), s"$q: opaque RDD boundary present:\n$p")
-    }
-    // the stages BEHIND the flagship's as-of are visible (no opaque RDD scan
-    // boundary)
-    val p = planOf("q_pit_backfill")
-    assert(p.contains("HashAggregate") && p.contains("Window"),
-      s"upstream stages hidden behind a scan boundary:\n$p")
+  test("q_pit_backfill: one shuffle into one PitSweep; q_asof_join: the native as-of") {
+    // the flagship: one exchange by the key, one sort, one sweep
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val executed = walk(SparkEntry.queries("q_pit_backfill")(spark, dir).queryExecution.executedPlan)
+    assert(executed.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, executed.head.treeString)
+    assert(executed.count(_.isInstanceOf[graft.plans.PitSweepExec]) == 1, executed.head.treeString)
+    assert(!executed.exists(p => p.isInstanceOf[RDDScanExec] || p.isInstanceOf[ExternalRDDScanExec[_]]),
+      executed.head.treeString)
+    val p = planOf("q_asof_join")
+    assert(p.contains("AsOfMerge"), s"q_asof_join: native as-of missing:\n$p")
+    assert(!p.contains("Scan ExistingRDD"), s"q_asof_join: opaque RDD boundary present:\n$p")
   }
 
   test("ANN top-k: single-query forms rank globally, batch forms rank per query") {
