@@ -21,8 +21,8 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   /** Return the session to zero retained storage: drop operator-scoped
-    * persists (IVF lists, `mergedScalable`'s sorted union), the SQL cache, and
-    * any stray RDD persists. Round 4's driver bench showed why this matters:
+    * persists (the IVF lists), the SQL cache, and any stray RDD persists.
+    * Round 4's `graft.Bench` run showed why this matters:
     * caches pinned by earlier queries in the 60×2-rep shared JVM slowed two
     * UNRELATED mid-pack queries ~3× and depressed the TPS loop — every rep
     * now starts from the same clean-session state a fresh JVM would give. */

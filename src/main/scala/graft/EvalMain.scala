@@ -66,7 +66,7 @@ object EvalMain {
     val scored = model.transform(assembled).select(col("purchase_yn").as("y"),
       org.apache.spark.ml.functions.vector_to_array(col("probability"))(1).as("score"))
     // driver-side collect bounded like every other collect in the repo
-    // (Xlsx.maxRows, broadcastIndex maxIndexRows): past 2000 distinct scores
+    // (Xlsx.maxRows): past 2000 distinct scores
     // the curve quantizes to a 2000-point grid — indistinguishable in an SVG
     val curve = Metrics.prCurve(scored, "y", "score",
         maxDistinctScores = 2000L, quantizeBins = 2000)

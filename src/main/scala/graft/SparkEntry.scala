@@ -103,10 +103,13 @@ object SparkEntry {
     // — as-of variant equivalence (same oracle as q_asof_join) —
     "q_asof_windowed" -> ((s, dir) =>
       asofVariant(s, dir, AsOfJoin.windowed(_, _, _, _, _, _, _))),
+    // the planned operator is the engine's only as-of path; these two names
+    // stay registered on it so the oracle's query set and the bench's keys
+    // stay stable
     "q_asof_bcast" -> ((s, dir) =>
-      asofVariant(s, dir, AsOfJoin.broadcastIndex(_, _, _, _, _, _, _))),
+      asofVariant(s, dir, graft.plans.AsOfPlan.asOfJoin(_, _, _, _, _, _, _))),
     "q_asof_scalable" -> ((s, dir) =>
-      asofVariant(s, dir, AsOfJoin.mergedScalable(_, _, _, _, _, _, _))),
+      asofVariant(s, dir, graft.plans.AsOfPlan.asOfJoin(_, _, _, _, _, _, _))),
     "q_asof_planned" -> ((s, dir) =>
       asofVariant(s, dir, graft.plans.AsOfPlan.asOfJoin(_, _, _, _, _, _, _))),
 

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, LogisticRegression, LogisticRegressionModel, RandomForestClassifier}
+import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,8 +10,8 @@ import graft.ops.{CategoricalOps, Metrics}
   * sklearn pipeline re-expressed as distributed dataflow. Documented
   * deviations (BASELINE.md): solvers differ (coefficient-level parity is not
   * promised — feature-level parity is the contract); SMOTE is replaced by a
-  * deterministic within-class interpolation oversampler; XGBoost/CatBoost map
-  * to GBTClassifier.
+  * deterministic within-class interpolation oversampler; the model families
+  * are logistic regression and random forest.
   */
 object Models {
 
@@ -172,29 +172,6 @@ object Models {
     cur
   }
 
-  /** Per-fold CV metrics for a model family (stratified deterministic folds).
-    * Returns (fold, accuracy) rows collected — the reference's printed
-    * mean±std becomes a tiny driver-side aggregate. */
-  def cvAccuracy(df: DataFrame, features: Seq[String], labelCol: String, idCol: String,
-                 k: Int = 5, family: String = "lr"): Seq[(Int, Double)] = {
-    val folded = CategoricalOps.stratifiedFolds(df, idCol, labelCol, k)
-    (0 until k).map { f =>
-      val train = assemble(folded.filter(col("fold") =!= f), features, labelCol)
-      val test = assemble(folded.filter(col("fold") === f), features, labelCol)
-      val model = family match {
-        case "lr" => new LogisticRegression().setMaxIter(50).fit(train)
-        case "dt" => new DecisionTreeClassifier().setMaxDepth(6).setSeed(42L).fit(train)
-        case "rf" => new RandomForestClassifier().setNumTrees(50).setMaxDepth(10).setSeed(42L).fit(train)
-        case "gbt" => new GBTClassifier().setMaxIter(20).setMaxDepth(5).setSeed(42L).fit(train)
-      }
-      val pred = model.transform(test)
-      val acc = pred.agg(
-        (sum(when(col("prediction") === col("label"), 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double")).as("acc")).collect()(0).getDouble(0)
-      (f, acc)
-    }
-  }
-
   /** Per-fold train-side preparation of the flagship evaluation run: scale
     * on TRAIN-fold statistics only, then oversample the train folds only —
     * the reference's in-fold SMOTE leakage control (`LR_Advanced.py:621-627`:
@@ -290,61 +267,6 @@ object Models {
     new org.apache.spark.ml.feature.PCA()
       .setInputCol("features").setOutputCol("pca").setK(k)
       .fit(data).transform(data).drop("features", "label")
-  }
-
-  /** Hyperparameter search analog of RandomizedSearchCV
-    * (`directory/XGB_RF_LR_CV.py:82-100`): grid over regParam with k-fold CV
-    * on AUC, returns (bestRegParam, bestAuc). Deterministic (no random
-    * sampling — the full small grid is evaluated). */
-  def tuneLogistic(df: DataFrame, features: Seq[String], labelCol: String,
-                   grid: Seq[Double] = Seq(0.001, 0.01, 0.1), k: Int = 3): (Double, Double) = {
-    val data = assemble(df, features, labelCol)
-    val lr = new LogisticRegression().setMaxIter(50)
-    val params = new org.apache.spark.ml.tuning.ParamGridBuilder()
-      .addGrid(lr.regParam, grid.toArray).build()
-    val cv = new org.apache.spark.ml.tuning.CrossValidator()
-      .setEstimator(lr)
-      .setEvaluator(new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator())
-      .setEstimatorParamMaps(params).setNumFolds(k).setSeed(42L)
-    val m = cv.fit(data)
-    val best = m.avgMetrics.zip(grid).maxBy(_._1)
-    (best._2, best._1)
-  }
-
-  /** RandomizedSearchCV analog (`directory/XGB_RF_LR_CV.py:43-100`): sample
-    * `nIter` parameter combos with a seeded RNG from the cross-product space
-    * (the reference samples 12 combos of its XGB/RF/LR spaces rather than
-    * exhausting the grid), evaluate each with stratified k-fold accuracy,
-    * return combos ranked best-first. `family`: "lr" (regParam /
-    * elasticNetParam) or "rf" (numTrees / maxDepth). */
-  def randomizedSearch(df: DataFrame, features: Seq[String], labelCol: String, idCol: String,
-                       space: Map[String, Seq[Double]], nIter: Int = 12, k: Int = 3,
-                       seed: Long = 42L, family: String = "lr"): Seq[(Map[String, Double], Double)] = {
-    val rnd = new scala.util.Random(seed)
-    val keys = space.keys.toSeq.sorted
-    val combos = Seq.fill(nIter)(
-      keys.map(kk => kk -> space(kk)(rnd.nextInt(space(kk).size))).toMap).distinct
-    val folded = CategoricalOps.stratifiedFolds(df, idCol, labelCol, k).cache()
-    val ranked = combos.map { params =>
-      val accs = (0 until k).map { f =>
-        val train = assemble(folded.filter(col("fold") =!= f), features, labelCol)
-        val test = assemble(folded.filter(col("fold") === f), features, labelCol)
-        val model = family match {
-          case "lr" => new LogisticRegression().setMaxIter(30)
-            .setRegParam(params.getOrElse("regParam", 0.0))
-            .setElasticNetParam(params.getOrElse("elasticNetParam", 0.0)).fit(train)
-          case "rf" => new RandomForestClassifier()
-            .setNumTrees(params.getOrElse("numTrees", 50.0).toInt)
-            .setMaxDepth(params.getOrElse("maxDepth", 5.0).toInt).setSeed(42L).fit(train)
-        }
-        model.transform(test).agg(
-          (sum(when(col("prediction") === col("label"), 1L).otherwise(0L)).cast("double") /
-            count(lit(1)).cast("double")).as("acc")).collect()(0).getDouble(0)
-      }
-      params -> accs.sum / accs.size
-    }.sortBy(-_._2)
-    folded.unpersist()
-    ranked
   }
 
   /** OOF soft-voting / stacking base: out-of-fold probability column per

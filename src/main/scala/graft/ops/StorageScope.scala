@@ -1,19 +1,19 @@
 package graft.ops
 
 import scala.util.control.NonFatal
+import org.apache.spark.sql.DataFrame
 
 /** Deterministic release of persists that must OUTLIVE their operator.
   *
   * Some operators return plans that read a persist made at construction
-  * (the IVF inverted lists in [[Similarity]], the sorted union in
-  * [[AsOfJoin.mergedScalable]]) — unpersisting before return would force
-  * that work to recompute on first consumption, but never unpersisting
-  * leaks executor storage in long-lived sessions (the round-4 driver bench
-  * measurably slowed two unrelated queries ~3× after such caches
-  * accumulated across 60×2 reps). This scope is the middle path: operators
-  * register the handles they intentionally leave persisted; the session
-  * owner (Bench between reps, a spec's afterAll, a production job between
-  * pipeline stages) calls [[release]] once the results are consumed.
+  * (the IVF inverted lists in [[Similarity]]) — unpersisting before return
+  * would force that work to recompute on first consumption, but never
+  * unpersisting leaks executor storage in long-lived sessions (the round-4
+  * `graft.Bench` run measurably slowed two unrelated queries ~3× after such
+  * caches accumulated across 60×2 reps). This scope is the middle path:
+  * operators register the handles they intentionally leave persisted; the
+  * session owner (Bench between reps, a spec's afterAll, a production job
+  * between pipeline stages) calls [[release]] once the results are consumed.
   *
   * Operators take a `scope: StorageScope = StorageScope.global` parameter —
   * callers that manage lifetimes per-job pass their own scope; everyone else
@@ -21,20 +21,16 @@ import scala.util.control.NonFatal
   * behavior until someone calls `StorageScope.global.release()`.
   *
   * Thread-safe; releasing is idempotent and swallows per-handle failures
-  * (an already-unpersisted RDD must not mask the others).
+  * (an already-unpersisted handle must not mask the others).
   */
 final class StorageScope {
-  private val handles = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  private val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  def retain[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
-    synchronized { handles += (() => { rdd.unpersist(blocking = false); () }); rdd }
-
-  def retain(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    synchronized { handles += (() => { df.unpersist(blocking = false); () }); df }
+  def retain(df: DataFrame): DataFrame = synchronized { handles += df; df }
 
   /** Unpersist everything retained since the last release. */
   def release(): Unit = synchronized {
-    handles.foreach(f => try f() catch { case NonFatal(_) => })
+    handles.foreach(df => try df.unpersist(blocking = false) catch { case NonFatal(_) => })
     handles.clear()
   }
 

@@ -11,14 +11,12 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
-import graft.ops.AsOfJoin
 
 /** The as-of join as a FIRST-CLASS Catalyst operator: a logical node, a
   * planner strategy, and a physical merge exec.
   *
   * Why a physical plan and not a Dataset-level merge that builds its
-  * shuffle+sort by hand and crosses an `internalCreateDataFrame` RDD
-  * boundary: such a merge shows up in EXPLAIN as an opaque scan, AQE cannot
+  * shuffle+sort by hand and wraps its RDD as a DataFrame: such a merge shows up in EXPLAIN as an opaque scan, AQE cannot
   * re-plan around it, and Catalyst cannot push projections/filters through
   * it. Here the physical node just DECLARES what it needs —
   *
@@ -35,7 +33,7 @@ import graft.ops.AsOfJoin
   * carried state (a row of an earlier key can reach no later anchor), and
   * it is copied into one reused buffer. Each output row is the memcpy
   * concatenation of the left UnsafeRow and the payload UnsafeRow
-  * ([[graft.ops.AsOfJoin.RowJoiner]]), not a field-by-field projection;
+  * ([[RowJoiner]]), not a field-by-field projection;
   * unmatched anchors join one all-null payload row built on the driver.
   * The output is emitted in left order, clustered and sorted like the left
   * child, so a second as-of on the same key and ts reads these rows with no
@@ -46,25 +44,28 @@ import graft.ops.AsOfJoin
   * matched anchors and `maxKeyRun`, the longest run of left rows with one
   * key in a task (max-aggregated: the skew signal).
   *
-  * Semantics (property-tested identical to the other variants in
-  * AsOfJoinSpec): for each left row, the payload of the latest right row
-  * with the same key and right.ts <= left.ts; null if none; null keys form
-  * one group (Window.partitionBy semantics, NOT SQL equi-join nulls).
+  * Semantics (property-tested identical to the declarative
+  * [[graft.ops.AsOfJoin.windowed]] in AsOfJoinSpec): for each left row,
+  * the payload of the latest right row with the same key and right.ts <=
+  * left.ts; null if none; the greatest seq wins a (key, ts) tie, and a full
+  * (key, ts, seq) tie picks one of the tied rows, unspecified which; null
+  * keys form one group (Window.partitionBy semantics, NOT SQL equi-join
+  * nulls).
   *
   * Skew and task count: ClusteredDistribution keeps a key inside one
-  * partition, so a mega-key lands on one task — same trade as
-  * SortMergeJoin. When the merge input is small (a few MB shuffled), AQE
-  * also coalesces every partition into one task, so the per-row cost of the
+  * partition, so a mega-key lands on one task. Unlike SortMergeJoin, AQE's
+  * skew-join rewrite does not apply (it splits only sort-merge and
+  * shuffled-hash joins), so the key stays on one task; `maxKeyRun` reports
+  * its length. When the merge input is small (a few MB shuffled), AQE also
+  * coalesces every partition into one task, so the per-row cost of the
   * sweep and the output row build sits on the critical path for all keys,
-  * not only the skewed one. For keys that dominate partitions, use
-  * [[graft.ops.AsOfJoin.mergedScalable]] (range partitioning + boundary
-  * stitching), which stays the documented skew path.
+  * not only the skewed one.
   *
-  * The flagship backfill does not run this operator any more: it picks the
-  * as-of state inside its own sweep ([[PitSweep]]). This one serves
-  * q_asof_join, q_asof_planned and direct callers (perfbench's merge
-  * layer). Against the hand-built Dataset-level merge it was the fastest
-  * variant measured (sf0.1: 0.6 s vs 1.0 s).
+  * This is the engine's only as-of join operator. The flagship backfill
+  * picks its as-of state inside its own sweep ([[PitSweep]]); this one
+  * serves the registered q_asof_* queries and direct callers (perfbench's
+  * merge layer). Against the hand-built Dataset-level merges it was the
+  * fastest form measured (sf0.1: 0.6 s vs 1.0 s).
   */
 object AsOfPlan {
 
@@ -72,10 +73,9 @@ object AsOfPlan {
   def asOfJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
                rightSeq: String, payload: Seq[String], prefix: String = "asof_"): DataFrame = {
     val spark = left.sparkSession
-    // same fail-fast contracts as the Dataset-level variants: whitelisted
-    // key types (InternalRow equals-comparison soundness) and long-backed
-    // timestamps (the merge compares raw micros)
-    AsOfJoin.requireKeyType(left, key, "planned")
+    // fail fast at build time: whitelisted key types (typed key compares)
+    // and long-backed timestamps (the merge compares raw micros)
+    PlanSupport.requireKeyType(left, key, "AsOfPlan.asOfJoin")
     Seq(left.schema(ts).dataType, right.schema(ts).dataType).foreach { dt =>
       require(dt == org.apache.spark.sql.types.TimestampType ||
         dt == org.apache.spark.sql.types.TimestampNTZType ||
@@ -172,13 +172,13 @@ case class AsOfMergeExec(
     def schemaOf(as: Seq[Attribute]) = StructType(as.map(a => StructField(a.name, a.dataType, a.nullable)))
     val (lSchema, pSchema) = (schemaOf(lOut), schemaOf(outPayload))
     val payB = payload.map(p => BindReferences.bindReference(p: Expression, rOut))
-    val nullPay = AsOfJoin.nullPayload(pSchema)
+    val nullPay = PlanSupport.nullPayload(pSchema)
     val (numOut, numRight, numMatched, maxKeyRun) = (longMetric("numOutputRows"),
       longMetric("numRightRows"), longMetric("numMatchedRows"), longMetric("maxKeyRun"))
 
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
       val payProj = GenerateUnsafeProjection.generate(payB)
-      val join = new AsOfJoin.RowJoiner(lSchema, pSchema, nullPay)
+      val join = new RowJoiner(lSchema, pSchema, nullPay)
       val keys = KeyOrder.of(keyDt)
       val run = new KeyRun(keyDt)
       val rBuf = rIt.buffered

@@ -12,7 +12,6 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.ops.AsOfJoin
 
 /** The point-in-time backfill as ONE physical pass: a logical node, a
   * planner strategy and a sweep exec.
@@ -27,11 +26,11 @@ import graft.ops.AsOfJoin
   *     one. The stats row (`${r}_min`, `_max`, `_avg`, `_count` per role,
   *     `_avg` = sum / windows over doubles) is then projected through the
   *     payload (stats ++ features) ONCE, into one reused buffer;
-  *   - every input row emits its anchor columns joined
-  *     ([[graft.ops.AsOfJoin.RowJoiner]]) to the payload of its key's last
-  *     completed window, or to the shared all-null payload when there is
-  *     none; only then is its role counted into the open window. So a row
-  *     never sees its own still-open window, let alone a later one.
+  *   - every input row emits its anchor columns joined ([[RowJoiner]]) to
+  *     the payload of its key's last completed window, or to the shared
+  *     all-null payload when there is none; only then is its role counted
+  *     into the open window. So a row never sees its own still-open
+  *     window, let alone a later one.
   *
   * All anchors of one window see the same state, so ts and seq are not sort
   * keys. The exec compares window starts for equality only and never
@@ -59,7 +58,7 @@ object PitSweep {
     require(roles.nonEmpty, "PitSweep: roles must be non-empty")
     val dups = roles.diff(roles.distinct).distinct
     require(dups.isEmpty, s"PitSweep: roles must be distinct, repeated: ${dups.mkString(", ")}")
-    AsOfJoin.requireKeyType(child, key, "PitSweep")
+    PlanSupport.requireKeyType(child, key, "PitSweep")
     val roleDt = child.schema(role).dataType
     require(roleDt == StringType, s"PitSweep: role column '$role' must be a string, got $roleDt")
     val wsDt = child.schema(windowStart).dataType
@@ -152,7 +151,7 @@ case class PitSweepExec(
     val statSchema = schemaOf(statAttrs)
     val boundAnchor = anchor.map(a => BindReferences.bindReference(a: Expression, in))
     val boundPay = (statAttrs ++ features).map(BindReferences.bindReference(_, statAttrs))
-    val nullPay = AsOfJoin.nullPayload(paySchema)
+    val nullPay = PlanSupport.nullPayload(paySchema)
     val names = roles.map(UTF8String.fromString).toArray
     val nr = names.length
     val (numOut, numWindows, maxKeyRun) =
@@ -161,9 +160,9 @@ case class PitSweepExec(
     child.execute().mapPartitions { it =>
       val anchorProj = UnsafeProjection.create(boundAnchor)
       val payProj = GenerateUnsafeProjection.generate(boundPay, true)
-      val join = new AsOfJoin.RowJoiner(anchorSchema, paySchema, nullPay)
+      val join = new RowJoiner(anchorSchema, paySchema, nullPay)
       val run = new KeyRun(keyDt)
-      val statRow = AsOfJoin.nullPayload(statSchema) // fixed-width, set in place
+      val statRow = PlanSupport.nullPayload(statSchema) // fixed-width, set in place
       val pay = nullPay.copy() // byte-array backed, refilled by copyFrom
       // the open window: its start and per-role counts
       var wsNull = false

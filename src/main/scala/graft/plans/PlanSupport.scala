@@ -1,9 +1,10 @@
 package graft.plans
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeRowJoiner
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.types._
@@ -11,8 +12,28 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.AccumulatorV2
 
 /** What the engine's physical operators share: idempotent strategy
-  * registration and the max-aggregated SQL metric. */
+  * registration, the max-aggregated SQL metric, the key-type whitelist and
+  * the output row joiner of the as-of merges ([[AsOfMergeExec]],
+  * [[PitSweepExec]]). */
 object PlanSupport {
+
+  /** Key types the merges support. Their key comparisons go through the
+    * typed getter of the key's type ([[KeyOrder]]); BinaryType and other
+    * types have no entry there, so they fail fast here, at build time. */
+  private val SupportedKeyTypes: Set[DataType] = Set(
+    StringType, ByteType, ShortType, IntegerType, LongType, BooleanType,
+    DateType, TimestampType, TimestampNTZType)
+
+  def requireKeyType(df: DataFrame, key: String, op: String): Unit = {
+    val dt = df.schema(key).dataType
+    require(SupportedKeyTypes.contains(dt),
+      s"$op: unsupported key type $dt for '$key' — supported: " +
+        "string / integral / boolean / date / timestamp")
+  }
+
+  /** The all-null payload row joined to anchors with no match. */
+  def nullPayload(pSchema: StructType): UnsafeRow =
+    UnsafeProjection.create(pSchema)(new GenericInternalRow(pSchema.size)).copy()
 
   /** Idempotently add `strategy` to an existing session (sessions built
     * with `spark.sql.extensions=graft.GraftExtensions` get it injected). */
@@ -41,10 +62,35 @@ final class MaxMetric extends SQLMetric("sum", 0L) {
   override def merge(other: AccumulatorV2[Long, Long]): Unit = add(other.value)
 }
 
+/** The output kernel of the as-of merges. One output row is the memcpy
+  * concatenation of the left row and the payload row
+  * (`GenerateUnsafeRowJoiner`, as CartesianProductExec uses it): it copies
+  * both null bitsets, the fixed-width slots and both variable-length
+  * regions, then shifts the variable-length offsets. A projection over a
+  * JoinedRow instead rebuilds the row field by field. Rows that are not
+  * already UnsafeRows are projected to one first; a null payload means
+  * "no match" and joins `nullPay` (build it once with
+  * [[PlanSupport.nullPayload]]). The returned row is reused: copy it to
+  * retain it. The generated joiner is not serializable, so create one per
+  * task. */
+private[plans] final class RowJoiner(lSchema: StructType, pSchema: StructType,
+                                     nullPay: UnsafeRow) {
+  private val joiner = GenerateUnsafeRowJoiner.create(lSchema, pSchema)
+  private lazy val lProj = UnsafeProjection.create(lSchema)
+  private lazy val pProj = UnsafeProjection.create(pSchema)
+  def apply(l: InternalRow, pay: InternalRow): UnsafeRow = joiner.join(
+    l match { case u: UnsafeRow => u; case other => lProj(other) },
+    pay match {
+      case null => nullPay
+      case u: UnsafeRow => u
+      case other => pProj(other)
+    })
+}
+
 /** Nulls-first three-way compare of a key column of two rows through the
   * typed getter of its type: no generic `get(ordinal, dataType)`, no boxing,
   * no interpreted ordering. One per key type of the
-  * [[graft.ops.AsOfJoin.requireKeyType]] whitelist. */
+  * [[PlanSupport.requireKeyType]] whitelist. */
 private[plans] abstract class KeyOrder {
   protected def cmp(a: InternalRow, ao: Int, b: InternalRow, bo: Int): Int
 

@@ -31,13 +31,4 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Wrap an RDD[InternalRow] as a DataFrame without external-Row conversion
-    * (the classic session's private[sql] internalCreateDataFrame). */
-  def internalCreateDataFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 }

@@ -4,8 +4,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import graft.ops.AsOfJoin
 
-/** Three-way equivalence of the as-of join variants + oracle + leakage
-  * properties (SURVEY §7.4.5). */
+/** Equivalence of the two as-of forms (declarative `windowed`, planned
+  * operator) with an in-memory oracle, plus leakage properties
+  * (SURVEY §7.4.5). */
 case class AsOfL(user_id: Long, event_id: Long, ts: Timestamp)
 case class AsOfR(user_id: Long, ts: Timestamp, event_id: Long, value: Double)
 /** Variable-length columns on both sides (string, array<int>, struct<string,long>). */
@@ -14,6 +15,9 @@ case class AsOfVL(user_id: Long, event_id: Long, ts: Timestamp, name: String,
                   tags: Seq[Option[Int]], info: AsOfInfo)
 case class AsOfVR(user_id: Long, ts: Timestamp, event_id: Long, label: String,
                   vals: Seq[Option[Int]], meta: AsOfInfo)
+/** A right side whose payload is a map: not orderable, so no form may sort
+  * or aggregate by it. */
+case class AsOfMR(user_id: Long, ts: Timestamp, event_id: Long, attrs: Map[String, Int])
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -56,11 +60,10 @@ class AsOfJoinSpec extends SparkSpec {
 
   private val variants: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
     "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
     "planned" -> planned)
 
-  test("all three variants equal the in-memory oracle on random scenarios") {
-    for (seed <- Seq(1L, 2L, 3L)) {
+  test("windowed and planned equal the in-memory oracle on random scenarios") {
+    for (seed <- Seq(1L, 2L, 3L, 4L, 5L)) {
       val (left, right) = scenario(seed, nKeys = 7, nLeft = 300, nRight = 120)
       val expected = inMemory(left, right)
       variants.foreach { case (name, f) =>
@@ -69,9 +72,8 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("skew-proof mergedScalable equals the oracle, incl. a mega-key spanning many partitions") {
-    // one key holds ~90% of rows -> with 8 range partitions on (key, ts) it
-    // MUST span several partitions, exercising the boundary stitching
+  test("mega-key: windowed and planned equal the oracle when one key holds 90% of rows") {
+    // one key holds ~90% of the rows, so it fills one merge task on its own
     val rnd = new scala.util.Random(17)
     val left = (0 until 2000).map { i =>
       val k = if (i % 10 == 0) rnd.nextInt(5).toLong + 100L else 7L
@@ -82,40 +84,7 @@ class AsOfJoinSpec extends SparkSpec {
       R(k, t(rnd.nextInt(5000).toLong), (10000 + i).toLong, rnd.nextInt(100).toDouble)
     }
     val expected = inMemory(left, right)
-    val got = run((l, r) =>
-      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-        numPartitions = 8), left, right)
-    assert(got == expected)
-  }
-
-  test("mergedScalable on random scenarios equals the in-memory oracle") {
-    for (seed <- Seq(4L, 5L)) {
-      val (left, right) = scenario(seed, nKeys = 7, nLeft = 300, nRight = 120)
-      val expected = inMemory(left, right)
-      val got = run((l, r) =>
-        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-          numPartitions = 5), left, right)
-      assert(got == expected, s"seed $seed")
-    }
-  }
-
-  test("mergedScalable: releasing StorageScope.global after the result is consumed leaves no cache behind") {
-    val (left, right) = scenario(6L, nKeys = 5, nLeft = 200, nRight = 80)
-    val cacheManager =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-    // numCachedEntries is private[sql] in Scala but public in bytecode
-    def cachedEntries = cacheManager.getClass.getMethod("numCachedEntries")
-      .invoke(cacheManager).asInstanceOf[Int]
-    graft.ops.StorageScope.global.release()
-    val cachedBefore = cachedEntries
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val got = run((l, r) =>
-      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-        numPartitions = 4), left, right)
-    assert(got == inMemory(left, right))
-    graft.ops.StorageScope.global.release()
-    assert(cachedEntries == cachedBefore, "cache manager entry left behind")
-    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "persistent RDD left behind")
+    variants.foreach { case (name, f) => assert(run(f, left, right) == expected, name) }
   }
 
   test("inclusive at equal timestamps; greatest-seq tiebreak among right dups") {
@@ -151,9 +120,7 @@ class AsOfJoinSpec extends SparkSpec {
     val (left, right) = scenario(11L, nKeys = 5, nLeft = 120, nRight = 60)
     val expected = inMemory(left, right)
     def asInt(df: DataFrame) = df.withColumn("user_id", col("user_id").cast("int"))
-    (variants :+ ("mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
-      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))))
-    ).foreach { case (name, f) =>
+    variants.foreach { case (name, f) =>
       val got = f(asInt(left.toDF()), asInt(right.toDF())).collect().map { r =>
         val id = r.getLong(r.fieldIndex("event_id"))
         val aid = Option(r.get(r.fieldIndex("asof_event_id"))).map(_.asInstanceOf[Long])
@@ -166,7 +133,7 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("null keys: payloads carry within the null group, all variants agree") {
     import org.apache.spark.sql.functions.{col, when}
-    // many null-key rows so the null group spans range-partition boundaries
+    // half the anchors have a null key
     val left = (0 until 200).map(i => L(if (i % 2 == 0) 0L else 1L, i.toLong, t(i.toLong)))
     val right = Seq(R(0, t(0), 1000, 1.0), R(1, t(0), 1001, 2.0))
     def nullify(df: DataFrame) = df.withColumn("user_id",
@@ -179,18 +146,11 @@ class AsOfJoinSpec extends SparkSpec {
     val fromWindowed = runNull((l, r) =>
       AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value")))
     // engine semantic: null keys form ONE group (Window.partitionBy groups
-    // nulls; NOT SQL equi-join NULL-never-matches) — all variants must agree,
-    // including the boundary carry in mergedScalable (haveCarry flag, not a
-    // null-key sentinel)
+    // nulls; NOT SQL equi-join NULL-never-matches) — both forms must agree
     (0 until 200 by 2).foreach(i =>
       assert(fromWindowed(i.toLong).contains(1000L), s"null anchor $i"))
     assert(fromWindowed(1L).contains(1001L))
-    for ((name, f) <- Seq(
-      "mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
-        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-          numPartitions = 8)),
-      "planned" -> planned))
-      assert(runNull(f) == fromWindowed, s"null-key variant $name")
+    assert(runNull(planned) == fromWindowed, "null-key planned")
   }
 
   test("planned variant: EXPLAIN shows the native operator, exchanges and sorts") {
@@ -256,13 +216,37 @@ class AsOfJoinSpec extends SparkSpec {
     assert(expected.values.exists(_.last == null) && expected.values.exists(_.last != null))
     val windowed = byEventId(AsOfJoin.windowed(lDf, rDf, "user_id", "ts", "event_id", payload))
     assert(windowed == expected, "windowed vs in-memory oracle")
+    val plannedOut = byEventId(graft.plans.AsOfPlan.asOfJoin(lDf, rDf, "user_id", "ts", "event_id", payload))
+    assert(plannedOut == expected, "variable-length planned")
+  }
+
+  test("a map payload (not orderable) joins through windowed and planned, greatest seq winning ties") {
+    val rnd = new scala.util.Random(29)
+    val left = (0 until 150).map(i => L(rnd.nextInt(4).toLong, i.toLong, t(rnd.nextInt(200).toLong)))
+    // timestamps drawn from 60 values: many right rows share a (key, ts)
+    val right = (0 until 120).map { i =>
+      val attrs = if (rnd.nextInt(8) == 0) null
+        else (0 until rnd.nextInt(3)).map(j => s"a$j" -> rnd.nextInt(50)).toMap
+      AsOfMR(rnd.nextInt(3).toLong, t(rnd.nextInt(60).toLong * 3), (1000 + i).toLong, attrs)
+    }
+    assert(right.groupBy(r => (r.user_id, r.ts)).exists(_._2.size > 1), "fixture has (key, ts) ties")
+    val expected = left.map { l =>
+      val best = right.filter(r => r.user_id == l.user_id && !r.ts.after(l.ts))
+        .sortBy(r => (r.ts.getTime, r.event_id)).lastOption
+      l.event_id -> (best.map(_.event_id), best.flatMap(b => Option(b.attrs)))
+    }.toMap
+    assert(expected.values.exists(_._2.exists(_.nonEmpty)) && expected.values.exists(_._1.isEmpty))
+    val payload = Seq("event_id", "attrs")
     Seq[(String, (DataFrame, DataFrame) => DataFrame)](
-      "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", payload)),
-      "mergedScalable" -> ((l, r) =>
-        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", payload, numPartitions = 3)),
-      "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", payload))
+      "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", payload)),
+      "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", payload))
     ).foreach { case (name, f) =>
-      assert(byEventId(f(lDf, rDf)) == expected, s"variable-length $name")
+      val got = f(left.toDF(), right.toDF()).collect().map { r =>
+        r.getLong(r.fieldIndex("event_id")) ->
+          (Option(r.get(r.fieldIndex("asof_event_id"))).map(_.asInstanceOf[Long]),
+            Option(r.getMap[String, Int](r.fieldIndex("asof_attrs"))).map(_.toMap))
+      }.toMap
+      assert(got == expected, s"map payload $name")
     }
   }
 
@@ -303,18 +287,14 @@ class AsOfJoinSpec extends SparkSpec {
     assert(m("numMatchedRows").value == matched)
   }
 
-  test("broadcastIndex fails fast on an oversized right side and bad key types") {
+  test("planned fails fast on a BinaryType key") {
     val (left, right) = scenario(13L, nKeys = 3, nLeft = 20, nRight = 15)
-    val e = intercept[IllegalArgumentException] {
-      AsOfJoin.broadcastIndex(left.toDF(), right.toDF(), "user_id", "ts", "event_id",
-        Seq("event_id", "value"), maxIndexRows = 5)
-    }
-    assert(e.getMessage.contains("maxIndexRows"))
     import org.apache.spark.sql.functions.col
     val binKey = (df: DataFrame) => df.withColumn("user_id",
       col("user_id").cast("string").cast("binary"))
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       planned(binKey(left.toDF()), binKey(right.toDF()))
     }
+    assert(e.getMessage.contains("unsupported key type"))
   }
 }

@@ -321,28 +321,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: jobs do not grow with chain length; building runs no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // jobs started while `f` runs; the bus delivers events in order, so once
-    // the marker job's start arrives every earlier job has been counted
-    def jobsDuring[A](f: => A): (A, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val markerSeen = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
-            markerSeen.countDown()
-          else jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        val a = f
-        sc.setLocalProperty("graft.spec.marker", "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
-        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-        (a, jobs.get)
-      } finally sc.removeSparkListener(listener)
-    }
     // a path of n nodes has diameter n - 1: round-based label propagation
     // would run a job per hop
     val counts = Seq(4, 64).map { n =>

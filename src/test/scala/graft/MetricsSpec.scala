@@ -274,7 +274,6 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("thresholdScan and rank metrics are lazy: building runs no job, nothing cached") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val cacheManager =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
     // numCachedEntries is private[sql] in Scala but public in bytecode
@@ -283,31 +282,12 @@ class MetricsSpec extends SparkSpec {
     val input = scored
     val cachedBefore = cachedEntries
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val built =
-      try {
-        val dfs = Seq(
-          Metrics.thresholdScan(input, "y", "score", (1 to 99).map(_ / 100.0)),
-          Metrics.aucRoc(input, "y", "score"),
-          Metrics.averagePrecision(input, "y", "score"),
-          Metrics.prCurve(input, "y", "score"))
-        // the bus delivers events in order: once the marker job's start
-        // arrives, every job started while building has been counted
-        sc.setLocalProperty("graft.spec.marker", "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
-        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-        dfs
-      } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0, s"building ran ${jobs.get} job(s)")
+    val (built, jobs) = jobsDuring(Seq(
+      Metrics.thresholdScan(input, "y", "score", (1 to 99).map(_ / 100.0)),
+      Metrics.aucRoc(input, "y", "score"),
+      Metrics.averagePrecision(input, "y", "score"),
+      Metrics.prCurve(input, "y", "score")))
+    assert(jobs == 0, s"building ran $jobs job(s)")
     assert(built.map(_.collect().length) == Seq(99, 1, 1, 21))
     assert(cachedEntries == cachedBefore, "cache manager entry left behind")
     assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "persistent RDD left behind")

@@ -101,9 +101,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(executed.count(_.isInstanceOf[graft.plans.PitSweepExec]) == 1, executed.head.treeString)
     assert(!executed.exists(p => p.isInstanceOf[RDDScanExec] || p.isInstanceOf[ExternalRDDScanExec[_]]),
       executed.head.treeString)
-    val p = planOf("q_asof_join")
-    assert(p.contains("AsOfMerge"), s"q_asof_join: native as-of missing:\n$p")
-    assert(!p.contains("Scan ExistingRDD"), s"q_asof_join: opaque RDD boundary present:\n$p")
+    // every registered as-of query but the declarative reference runs the
+    // one native operator
+    for (q <- Seq("q_asof_join", "q_asof_planned", "q_asof_bcast", "q_asof_scalable")) {
+      val p = planOf(q)
+      assert(p.contains("AsOfMerge"), s"$q: native as-of missing:\n$p")
+      assert(!p.contains("Scan ExistingRDD"), s"$q: opaque RDD boundary present:\n$p")
+    }
+  }
+
+  test("building any as-of query runs no job beyond reading its table") {
+    // the parquet reader infers the schema with a job of its own; each as-of
+    // query reads the events table once and must add nothing to that
+    val read = jobsDuring(Pipelines.table(spark, dir, "events"))._2
+    val asof = SparkEntry.queries.keys.toSeq.sorted.filter(_.startsWith("q_asof_"))
+    assert(asof.size == 5, asof)
+    val built = asof.map(q => q -> jobsDuring(SparkEntry.queries(q)(spark, dir))._2).toMap
+    assert(built.values.forall(_ == read), s"jobs while building (reading the table alone: $read): $built")
   }
 
   test("ANN top-k: single-query forms rank globally, batch forms rank per query") {
@@ -215,11 +229,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec}
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     import spark.implicits._
-    val allow: Map[String, String] = Map(
-      "q_asof_bcast" -> ("AsOfJoin.broadcastIndex: a map-only probe of a collected, " +
-        "size-guarded right-side index"),
-      "q_asof_scalable" -> ("AsOfJoin.mergedScalable: a seeded merge over range partitions, " +
-        "stitched by a driver-side carry pass"))
+    val allow: Map[String, String] = Map.empty
     def rddLeaves(df: DataFrame): Seq[String] = nodes(df).collect {
       case r: RDDScanExec => r.nodeName
       case r: ExternalRDDScanExec[_] => r.nodeName

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ml.QuantLR.{DefaultIters, DefaultLr, QuantScale, maxRowsFor}
 
 /** Reference implementation the specs compare [[graft.ml.QuantLR.fit]]
-  * against: the DataFrame gradient-descent loop it replaced, kept verbatim.
+  * against: the DataFrame gradient-descent loop it replaced, kept as it was
+  * except that its input leaf is built through the public RDD[Row] API.
   * Every GD iteration is a planned SQL aggregate
   * (`z.crossJoin(broadcast(wDf)).agg(...).head()`), so its null handling is
   * SQL's by construction: a null z or label makes the row's terms null and
@@ -42,12 +43,10 @@ object QuantLRReference {
     val proj = df.select(features.map(f => col(f).cast("long").as(f)) :+
       col(labelCol).cast("double").as("__y"): _*)
     val projSchema = proj.schema
-    // toRdd forces physical planning NOW, under the session's normal conf —
+    // `.rdd` forces physical planning NOW, under the session's normal conf —
     // the overrides below must never reshape the upstream compute
-    val rdd = proj.queryExecution.toRdd.mapPartitions(_.map(_.copy()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = org.apache.spark.sql.graftbridge.Bridge
-      .internalCreateDataFrame(spark, rdd, projSchema)
+    val rdd = proj.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = spark.createDataFrame(rdd, projSchema)
     // Conf scoped to the GD loop (restored in finally), both value-neutral:
     //   - AQE off: every iteration is one single-row global agg over the
     //     same cached leaf — nothing to re-optimize or coalesce, but

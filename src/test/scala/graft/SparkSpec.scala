@@ -6,6 +6,30 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `f`'s result and the number of Spark jobs started while it ran. The
+    * listener bus delivers events in order, so once a marker job's start
+    * arrives every earlier job has been counted. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
